@@ -3260,59 +3260,56 @@ def _q_trace_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checkable — the mapping cardinalities follow from the data
     (filter: one pair per surviving row; aggregation: one pair per
     contributing input row; export passthrough: identity)."""
+    import shutil
     import tempfile
 
     from python_dtl_spark.lineage import FileSystemTracer, TraceReader, run_traced
     from python_dtl_spark.sources import InMemoryExporter
 
     trace_dir = tempfile.mkdtemp(prefix="dtl_trace_")
-    run_traced(
-        _TRACE_SCRIPT,
-        spark=spark,
-        importer=FileSystemImporter(spark, sf_dir),
-        exporter=InMemoryExporter(),
-        tracer=FileSystemTracer(trace_dir),
-    )
-    reader = TraceReader(spark, trace_dir)
-    # One lazy plan, zero driver-side actions: tag every snapshot /
-    # mapping scan with its table id, union, and count per id in a
-    # single job when the caller materializes — the per-table
-    # .count() loop this replaces ran O(#statements) Spark jobs.
-    tables = reader.manifest["tables"]
-    meta = spark.createDataFrame(
-        [(t["id"], t["name"], t["level"]) for t in tables],
-        "id string, table_name string, level string",
-    )
-    snaps = None
-    for t in tables:
-        s = reader.snapshot(t["id"]).select(F.lit(t["id"]).alias("id"))
-        snaps = s if snaps is None else snaps.unionByName(s)
-    row_counts = snaps.groupBy("id").agg(F.count("*").alias("n_rows"))
-    pairs = None
-    for m in reader.manifest["mappings"]:
-        p = spark.read.parquet(f"{trace_dir}/{m['path']}").select(
-            F.lit(m["tgt"]).alias("id")
+    try:
+        run_traced(
+            _TRACE_SCRIPT,
+            spark=spark,
+            importer=FileSystemImporter(spark, sf_dir),
+            exporter=InMemoryExporter(),
+            tracer=FileSystemTracer(trace_dir),
         )
-        pairs = p if pairs is None else pairs.unionByName(p)
-    if pairs is not None:
-        pair_counts = pairs.groupBy("id").agg(
-            F.count("*").alias("n_lineage_pairs")
-        )
-    else:
-        pair_counts = meta.select("id").limit(0).withColumn(
-            "n_lineage_pairs", F.lit(0).cast("long")
-        )
-    return (
-        meta.join(row_counts, on="id", how="left")
-        .join(pair_counts, on="id", how="left")
-        .select(
-            "table_name",
-            "level",
-            F.coalesce("n_rows", F.lit(0)).cast("long").alias("n_rows"),
-            F.coalesce("n_lineage_pairs", F.lit(0))
-            .cast("long")
-            .alias("n_lineage_pairs"),
-        )
+        reader = TraceReader(spark, trace_dir)
+        tables = reader.manifest["tables"]
+        # One job: tag every snapshot row and every lineage pair with
+        # its table id, union, and count per (id, what).  The summary is
+        # collected so the trace directory can go before returning.
+        tagged = None
+        for t in tables:
+            part = reader.snapshot(t["id"]).select(
+                F.lit(t["id"]).alias("id"), F.lit("rows").alias("what")
+            )
+            tagged = part if tagged is None else tagged.unionByName(part)
+        edges = dict.fromkeys((m["src"], m["tgt"]) for m in reader.manifest["mappings"])
+        for src, tgt in edges:
+            tagged = tagged.unionByName(
+                reader.mapping(src, tgt).select(
+                    F.lit(tgt).alias("id"), F.lit("pairs").alias("what")
+                )
+            )
+        counts = {
+            (r["id"], r["what"]): r["n"]
+            for r in tagged.groupBy("id", "what").agg(F.count("*").alias("n")).collect()
+        }
+    finally:
+        shutil.rmtree(trace_dir, ignore_errors=True)
+    return spark.createDataFrame(
+        [
+            (
+                t["name"],
+                t["level"],
+                counts.get((t["id"], "rows"), 0),
+                counts.get((t["id"], "pairs"), 0),
+            )
+            for t in tables
+        ],
+        "table_name string, level string, n_rows long, n_lineage_pairs long",
     )
 
 

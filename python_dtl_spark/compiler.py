@@ -436,30 +436,37 @@ class Engine:
         candidate-mapping generation (mappings.py:41-275): assign this
         table a fresh row id, materialize it once through the tracer
         (so every downstream mapping/action sees identical ids), then
-        write one ``(src_rid, tgt_rid)`` pairs table per contributing
-        source — by-construction rids become direct projections;
-        deferred bridges become hash joins on the group key, exactly the
-        reference's ManyToMany∘ManyToMany recipe (mappings.py:310-322).
+        record one ``(src_rid, tgt_rid)`` mapping per contributing
+        source — by-construction rids are two columns of the
+        materialized table itself; deferred bridges become hash joins on
+        the group key, exactly the reference's ManyToMany∘ManyToMany
+        recipe (mappings.py:310-322).
         """
-        src_rids = list(table.src_rids)
+        uid = f"t{next(self._trace_ids):03d}_{name}"
         if table.uuid is not None:
             # passthrough of an already-finalized binding (TableRef /
-            # re-EXPORT): identity mapping via its own row ids
-            src_rids = [(table.uuid, table.rid_col)]
-        uid = f"t{next(self._trace_ids):03d}_{name}"
+            # re-EXPORT): same rows, same row ids — an alias of its
+            # snapshot with an identity mapping
+            self.tracer.record_alias(
+                uid,
+                table.uuid,
+                name=name,
+                level=level,
+                columns=table.columns,
+                rid_col=table.rid_col,
+                df=table.df,
+            )
+            return replace(table, uuid=uid)
         rid = self._phys("r")
         df = table.df.withColumn(rid, F.monotonically_increasing_id())
         full = self.tracer.materialize(uid, df, level=level)
         self.tracer.record_table(
             uid, name=name, level=level, columns=table.columns, rid_col=rid
         )
-        for src_uuid, phys in src_rids:
-            # outer joins leave unmatched-side rids NULL — no source row
-            pairs = (
-                full.filter(F.col(phys).isNotNull())
-                .select(F.col(phys).alias("src_rid"), F.col(rid).alias("tgt_rid"))
+        for src_uuid, phys in table.src_rids:
+            self.tracer.record_column_mapping(
+                src_uuid, uid, src_col=phys, tgt_col=rid, df=full
             )
-            self.tracer.record_mapping(src_uuid, uid, kind="by_construction", pairs=pairs)
         for src_uuid, bridge_df, bridge_phys in table.pending:
             pairs = (
                 bridge_df.join(

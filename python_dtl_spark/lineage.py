@@ -26,10 +26,17 @@ Spark-first re-expression (SURVEY.md §2.7):
 * mapping *composition* across statements is the same join, exposed as
   :func:`compose` and walked transitively by :class:`TraceReader`.
 
-Scale note: trace mode is opt-in and costs one parquet write per
-statement — at 100 TB you enable it for audited runs, or snapshot only
-selected levels.  The mappings themselves are narrow two-column tables
-that partition and join on rid with no skew.
+Scale note: trace mode is opt-in.  Per statement it writes one
+snapshot, plus one mapping file per ``by_key``, pipeline or sampled
+mapping; a by-construction mapping is no file of its own but two columns
+(hidden source rid, new rid) of its target's snapshot, and a passthrough
+(``EXPORT x`` / ``WITH y AS x``) shares its binding's snapshot and rids.
+The ``trace.json`` manifest records each file's Spark ``schema``, so
+no trace read runs a schema-inference job, and for a by-construction
+mapping the two ``columns`` to project (see :class:`FileSystemTracer`).
+At 100 TB you enable it for audited runs, or snapshot only selected
+levels.  The mapping files are narrow two-column tables that partition
+and join on rid with no skew.
 """
 
 from __future__ import annotations
@@ -40,6 +47,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # trace levels, mirroring reference ir.py:371-403 (Level enum)
 LEVELS = (
@@ -60,6 +68,7 @@ class TableRecord:
     columns: list[dict]
     row_id: str
     path: str | None  # None for in-memory tracers
+    schema: dict | None = None  # Spark schema of the file at ``path``
 
 
 @dataclass
@@ -69,12 +78,42 @@ class MappingRecord:
     tgt: str
     kind: str  # by_construction | by_key
     path: str | None
+    schema: dict | None = None  # Spark schema of the columns read at ``path``
+    # ``[src_col, tgt_col]`` inside a snapshot or pin file; None means
+    # ``path`` is a ``(src_rid, tgt_rid)`` pairs file
+    columns: list[str] | None = None
+
+
+def _column_pairs(df: DataFrame, src_col: str, tgt_col: str) -> DataFrame:
+    """The ``(src_rid, tgt_rid)`` pairs held by two rid columns of one
+    frame.  Outer joins leave unmatched-side source rids NULL: such rows
+    have no source row and yield no pair."""
+    return df.filter(F.col(src_col).isNotNull()).select(
+        F.col(src_col).alias("src_rid"), F.col(tgt_col).alias("tgt_rid")
+    )
 
 
 class FileSystemTracer:
     """Writes snapshots + mappings as parquet and a ``trace.json``
     manifest (reference FileSystemTracer, io.py:96-122; manifest format
-    inspired by manifest.py:10-59)."""
+    inspired by manifest.py:10-59).
+
+    Per statement it writes one snapshot under ``tables/`` (or, for a
+    level excluded from ``snapshot_levels``, a pin: nothing, or one file
+    under ``pins/``), plus one file under ``mappings/`` per ``by_key``,
+    pipeline or sampled mapping.  A by-construction mapping is recorded
+    as two columns of its target's snapshot or pin file, and is written
+    as a pairs file only when that target has no file (a
+    ``localCheckpoint`` pin).  A passthrough shares its binding's file.
+
+    Manifest (``version`` 1): each table record carries its ``path``
+    and the Spark ``schema`` of the file there; each mapping record
+    carries ``path``, ``schema`` and ``columns`` — ``[src_col,
+    tgt_col]`` to project out of the file at ``path``, or null for a
+    ``(src_rid, tgt_rid)`` pairs file.  Readers use the recorded schemas
+    instead of inferring them, and treat a missing ``schema`` /
+    ``columns`` key (traces written before these keys existed) as
+    "infer" / "pairs file"."""
 
     def __init__(
         self,
@@ -124,11 +163,26 @@ class FileSystemTracer:
         if pin not in ("local", "parquet"):
             raise ValueError(f"pin must be 'local' or 'parquet', got {pin!r}")
         self.pin = pin
-        self._snapshotted: set[str] = set()
+        # uid -> (path relative to root, schema) of its snapshot or pin file
+        self._files: dict[str, tuple[str, StructType]] = {}
         os.makedirs(os.path.join(root, "tables"), exist_ok=True)
         os.makedirs(os.path.join(root, "mappings"), exist_ok=True)
         self.tables: list[TableRecord] = []
         self.mappings: list[MappingRecord] = []
+
+    def _snapshots(self, level: str) -> bool:
+        return self.snapshot_levels is None or level in self.snapshot_levels
+
+    def _snapshot_file(self, uid: str) -> tuple[str, StructType] | None:
+        file = self._files.get(uid)
+        return file if file is not None and file[0].startswith("tables/") else None
+
+    def _write(self, uid: str, rel: str, df: DataFrame) -> DataFrame:
+        path = os.path.join(self.root, rel)
+        df.write.mode("overwrite").parquet(path)
+        self._files[uid] = (rel, df.schema)
+        # the known schema spares the read-back its inference job
+        return df.sparkSession.read.schema(df.schema).parquet(path)
 
     # -- engine-facing hooks --------------------------------------------------
 
@@ -136,19 +190,15 @@ class FileSystemTracer:
         """Pin the working table (data + hidden rid columns) once and
         hand back the materialized frame: every downstream mapping and
         the snapshot itself observe the same row ids."""
-        if self.snapshot_levels is not None and level not in self.snapshot_levels:
+        if not self._snapshots(level):
             if self.pin == "parquet":
-                path = os.path.join(self.root, "pins", f"{uid}.parquet")
                 os.makedirs(os.path.join(self.root, "pins"), exist_ok=True)
-                df.write.mode("overwrite").parquet(path)
-                return df.sparkSession.read.parquet(path)
+                return self._write(uid, f"pins/{uid}.parquet", df)
             return df.localCheckpoint(eager=True)
-        path = os.path.join(self.root, "tables", f"{uid}.parquet")
-        df.write.mode("overwrite").parquet(path)
-        self._snapshotted.add(uid)
-        return df.sparkSession.read.parquet(path)
+        return self._write(uid, f"tables/{uid}.parquet", df)
 
     def record_table(self, uid, *, name, level, columns, rid_col) -> None:
+        file = self._snapshot_file(uid)
         self.tables.append(
             TableRecord(
                 id=uid,
@@ -156,11 +206,8 @@ class FileSystemTracer:
                 level=level,
                 columns=[{"name": c, "dtype": d.name} for c, d in columns],
                 row_id=rid_col,
-                path=(
-                    f"tables/{uid}.parquet"
-                    if self.snapshot_levels is None or uid in self._snapshotted
-                    else None
-                ),
+                path=None if file is None else file[0],
+                schema=None if file is None else file[1].jsonValue(),
             )
         )
 
@@ -177,9 +224,56 @@ class FileSystemTracer:
         pairs.write.mode("overwrite").parquet(path)
         self.mappings.append(
             MappingRecord(
-                id=mid, src=src, tgt=tgt, kind=kind, path=f"mappings/{mid}.parquet"
+                id=mid,
+                src=src,
+                tgt=tgt,
+                kind=kind,
+                path=f"mappings/{mid}.parquet",
+                schema=pairs.schema.jsonValue(),
             )
         )
+
+    def record_column_mapping(self, src, tgt, *, src_col, tgt_col, df: DataFrame) -> None:
+        """A by-construction mapping: ``tgt``'s materialized frame ``df``
+        holds the source rids in ``src_col`` next to its own rids in
+        ``tgt_col``.  When ``tgt`` has a file, the mapping is recorded
+        as those two columns of it and nothing is written; otherwise
+        (``localCheckpoint`` pin, or a sampled trace) the pairs are
+        written through :meth:`record_mapping`."""
+        file = self._files.get(tgt)
+        if file is None or self.mapping_sample is not None:
+            pairs = _column_pairs(df, src_col, tgt_col)
+            self.record_mapping(src, tgt, kind="by_construction", pairs=pairs)
+            return
+        rel, schema = file
+        names = list(dict.fromkeys((src_col, tgt_col)))
+        self.mappings.append(
+            MappingRecord(
+                id=f"m{len(self.mappings):03d}",
+                src=src,
+                tgt=tgt,
+                kind="by_construction",
+                path=rel,
+                schema=StructType([schema[c] for c in names]).jsonValue(),
+                columns=[src_col, tgt_col],
+            )
+        )
+
+    def record_alias(self, uid, of, *, name, level, columns, rid_col, df: DataFrame) -> None:
+        """Record ``uid`` as a passthrough of the finalized table ``of``
+        (``EXPORT x`` / ``WITH y AS x``): the same rows under the same
+        rids in ``rid_col``, with an identity mapping.  It shares
+        ``of``'s file; only when ``of`` has no snapshot but ``level``
+        asks for one is ``df`` (``of``'s materialized frame) written."""
+        if self._snapshot_file(of) is not None or not self._snapshots(level):
+            # share of's snapshot, or its pin file if it has one
+            if of in self._files:
+                self._files[uid] = self._files[of]
+        else:
+            # of ran mapping-only but this level asks for a snapshot
+            self.materialize(uid, df, level)
+        self.record_table(uid, name=name, level=level, columns=columns, rid_col=rid_col)
+        self.record_column_mapping(of, uid, src_col=rid_col, tgt_col=rid_col, df=df)
 
     def write_manifest(self) -> None:
         manifest = {
@@ -196,7 +290,10 @@ class FileSystemTracer:
 class InMemoryTracer:
     """Test-scale tracer: snapshots pinned via ``localCheckpoint`` (the
     in-memory analogue of the parquet round-trip — materializes
-    partitions so row ids are stable across actions)."""
+    partitions so row ids are stable across actions).  Mirrors
+    :class:`FileSystemTracer`'s layout: a by-construction mapping is a
+    projection of its target's pinned snapshot and a passthrough reuses
+    its binding's pinned frame; only ``by_key`` pairs are pinned."""
 
     def __init__(self):
         self.snapshots: dict[str, DataFrame] = {}
@@ -221,12 +318,24 @@ class InMemoryTracer:
             )
         )
 
-    def record_mapping(self, src, tgt, *, kind, pairs: DataFrame) -> None:
+    def _add_pairs(self, src, tgt, kind, pairs: DataFrame) -> None:
         mid = f"m{len(self.mappings):03d}"
-        self.pairs[mid] = pairs.localCheckpoint(eager=True)
+        self.pairs[mid] = pairs
         self.mappings.append(
             MappingRecord(id=mid, src=src, tgt=tgt, kind=kind, path=None)
         )
+
+    def record_mapping(self, src, tgt, *, kind, pairs: DataFrame) -> None:
+        self._add_pairs(src, tgt, kind, pairs.localCheckpoint(eager=True))
+
+    def record_column_mapping(self, src, tgt, *, src_col, tgt_col, df: DataFrame) -> None:
+        # df is tgt's pinned frame: its projection needs no pin of its own
+        self._add_pairs(src, tgt, "by_construction", _column_pairs(df, src_col, tgt_col))
+
+    def record_alias(self, uid, of, *, name, level, columns, rid_col, df: DataFrame) -> None:
+        self.snapshots[uid] = self.snapshots[of]
+        self.record_table(uid, name=name, level=level, columns=columns, rid_col=rid_col)
+        self.record_column_mapping(of, uid, src_col=rid_col, tgt_col=rid_col, df=df)
 
     def write_manifest(self) -> None:
         pass
@@ -400,6 +509,22 @@ class TraceReader:
             return self._by_name[name_or_id]["id"]
         raise KeyError(f"no trace table {name_or_id!r}")
 
+    def _read(self, rec: dict) -> DataFrame:
+        """Read a record's file with its recorded schema (no inference
+        job); traces written before schemas were recorded infer it."""
+        reader = self.spark.read
+        if rec.get("schema") is not None:
+            reader = reader.schema(StructType.fromJson(rec["schema"]))
+        return reader.parquet(os.path.join(self.root, rec["path"]))
+
+    def _pairs(self, m: dict) -> DataFrame:
+        """A mapping record's ``(src_rid, tgt_rid)`` pairs: a pairs file,
+        or two rid columns projected out of a snapshot or pin file."""
+        df = self._read(m)
+        if m.get("columns") is None:
+            return df
+        return _column_pairs(df, *m["columns"])
+
     def snapshot(self, name_or_id: str) -> DataFrame:
         """The traced table's data columns plus its ``row_id`` column."""
         rec = self._by_id[self.table_id(name_or_id)]
@@ -409,7 +534,7 @@ class TraceReader:
                 f"{rec['level']} excluded from snapshot_levels); its rid "
                 "mappings exist but no data snapshot was written"
             )
-        df = self.spark.read.parquet(os.path.join(self.root, rec["path"]))
+        df = self._read(rec)
         cols = [c["name"] for c in rec["columns"]] + [rec["row_id"]]
         return df.select(*cols).withColumnRenamed(rec["row_id"], "__rid")
 
@@ -419,7 +544,7 @@ class TraceReader:
         out = None
         for m in self.manifest["mappings"]:
             if m["src"] == src and m["tgt"] == tgt:
-                pairs = self.spark.read.parquet(os.path.join(self.root, m["path"]))
+                pairs = self._pairs(m)
                 out = pairs if out is None else out.unionByName(pairs)
         return out
 
@@ -475,9 +600,7 @@ class TraceReader:
         reach: dict[str, DataFrame] = {}
         for node in order:
             for m in out_edges.get(node, []):
-                pairs = self.spark.read.parquet(
-                    os.path.join(self.root, m["path"])
-                )
+                pairs = self._pairs(m)
                 step = pairs if node == src else compose(reach[node], pairs)
                 if m["tgt"] in reach:
                     reach[m["tgt"]] = (

@@ -7,6 +7,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def df_debugging_flag(value: str | None) -> str:
+    """``SPARK_GRAFT_DF_DEBUGGING`` as the boolean conf string pyspark
+    compares against: ``1``/``true``/``yes`` (any case) → ``"true"``,
+    anything else (unset included) → ``"false"``."""
+    on = (value or "").strip().lower() in ("1", "true", "yes")
+    return "true" if on else "false"
+
+
 def get_spark(
     app_name: str = "python-dtl-spark",
     master: str | None = None,
@@ -53,14 +61,14 @@ def get_spark(
         # plan-construction overhead, no effect on results or on which
         # exceptions are raised (measured r20: dtl_q5 compile
         # 2.8 s -> 1.1 s, dtl_q6 1.2 s -> 0.2 s).
-        # SPARK_GRAFT_DF_DEBUGGING=true re-enables call-site-decorated
+        # SPARK_GRAFT_DF_DEBUGGING=1/true/yes re-enables call-site-decorated
         # errors for debugging (r20 advice).  Caveat: pyspark caches
         # is_debugging_enabled() process-globally on the first
         # Column-API call, so either value only sticks when get_spark
         # builds the process's FIRST session.
         .config(
             "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("SPARK_GRAFT_DF_DEBUGGING", "false"),
+            df_debugging_flag(os.environ.get("SPARK_GRAFT_DF_DEBUGGING")),
         )
         .config("spark.ui.enabled", "false")
     )

@@ -378,8 +378,8 @@ def test_mapping_sample_mode_deterministic_subset(spark, tmp_path):
     manifest = json.load(open(os.path.join(sampled_dirs[0], "trace.json")))
     assert manifest["mapping_sample"] == 4
 
-    def pairs(root, mid="m000"):
-        df = spark.read.parquet(os.path.join(root, "mappings", f"{mid}.parquet"))
+    def pairs(root):
+        df = TraceReader(spark, root).mapping("a", "big")
         return {(r.src_rid, r.tgt_rid) for r in df.collect()}
 
     exact = pairs(exact_dir)
@@ -925,3 +925,192 @@ def test_edit_distance_keep_one_lineage_walk(spark, tmp_path):
     assert [
         r["__rid"] for r in reader.why("kept", "titles", kept5).collect()
     ] == [5]
+
+
+def test_filesystem_layout_writes_only_by_key_mapping_files(spark, tmp_path):
+    """An exact trace writes one snapshot per statement and a mapping
+    file only for by_key mappings: by-construction mappings are two
+    columns of their target's snapshot, and the EXPORT passthrough
+    shares its binding's snapshot instead of writing one."""
+    import glob
+
+    trace_dir = os.path.join(str(tmp_path), "layout")
+    _run(
+        spark,
+        """
+        WITH a AS IMPORT 'a';
+        WITH big AS SELECT key, value, parity FROM a WHERE value > 10;
+        WITH g AS SELECT parity, sum(value) AS total FROM big GROUP BY parity;
+        EXPORT g TO 'out';
+        """,
+        {
+            "a": (
+                [(1, 10, 1), (2, 20, 0), (3, 30, 1), (4, 40, 0)],
+                "key long, value long, parity long",
+            )
+        },
+        FileSystemTracer(trace_dir),
+    )
+    manifest = json.load(open(os.path.join(trace_dir, "trace.json")))
+    tables = {t["name"]: t for t in manifest["tables"]}
+    kinds = {m["kind"] for m in manifest["mappings"]}
+    assert kinds == {"by_construction", "by_key"}
+    # mappings/ holds exactly the by_key pairs files
+    mapping_files = sorted(
+        os.path.relpath(p, trace_dir)
+        for p in glob.glob(os.path.join(trace_dir, "mappings", "*"))
+    )
+    assert mapping_files == sorted(
+        m["path"] for m in manifest["mappings"] if m["kind"] == "by_key"
+    )
+    for m in manifest["mappings"]:
+        if m["kind"] == "by_construction":
+            assert m["path"].startswith("tables/") and len(m["columns"]) == 2
+    # one snapshot per statement; the export shares g's file and rids
+    assert len(glob.glob(os.path.join(trace_dir, "tables", "*"))) == 3
+    assert tables["out"]["path"] == tables["g"]["path"]
+    assert tables["out"]["row_id"] == tables["g"]["row_id"]
+    assert all(t["schema"] is not None for t in manifest["tables"])
+
+    reader = TraceReader(spark, trace_dir)
+    assert reader.mapping("a", "big").count() == 3
+    assert reader.mapping("big", "g").count() == 3
+    assert reader.mapping("g", "out").count() == 2
+    assert reader.lineage("a", "out").count() == 3
+
+
+# LEFT JOIN leaves the unmatched customers' order rids NULL; GROUP BY
+# maps by key; `latest` and the EXPORT are passthroughs.
+EQUIV_SCRIPT = """
+    WITH o AS IMPORT 'o';
+    WITH c AS IMPORT 'c';
+    WITH j AS SELECT c.ckey AS ckey, okey, price
+              FROM c LEFT JOIN o ON c.ckey = o.ckey;
+    WITH g AS SELECT ckey, count(okey) AS n, sum(price) AS total
+              FROM j GROUP BY ckey;
+    WITH latest AS g;
+    EXPORT latest TO 'out';
+    """
+EQUIV_INPUTS = {
+    "o": (
+        [(10, 1, 5), (11, 1, 7), (12, 2, 9), (13, 9, 4)],
+        "okey long, ckey long, price long",
+    ),
+    "c": ([(1,), (2,), (3,)], "ckey long"),
+}
+
+
+def _data_rows(df):
+    return sorted(tuple(r) for r in df.drop("__rid").collect())
+
+
+def _mem_answers(tracer, chain, tgt_rows, src_rows):
+    """why/where_used over an InMemoryTracer, composed along ``chain``
+    (statement names, source first) with the same algebra TraceReader
+    uses.  ``tgt_rows``/``src_rows`` pick the asked-about rows of the
+    last/first table; returns (why data rows, where_used data rows)."""
+    recs = [_snap(tracer, name) for name in chain]
+    pairs = None
+    for (_, a), (_, b) in zip(recs, recs[1:]):
+        step = _pairs(tracer, a.id, b.id)
+        pairs = step if pairs is None else compose(pairs, step)
+
+    def with_rid(df, rec):
+        names = [c["name"] for c in rec.columns]
+        return df.select(*names, F.col(rec.row_id).alias("__rid"))
+
+    src, tgt = with_rid(*recs[0]), with_rid(*recs[-1])
+    why_rids = (
+        pairs.join(tgt_rows(tgt).select(F.col("__rid").alias("tgt_rid")), "tgt_rid")
+        .select(F.col("src_rid").alias("__rid"))
+        .dropDuplicates()
+    )
+    where_rids = (
+        pairs.join(src_rows(src).select(F.col("__rid").alias("src_rid")), "src_rid")
+        .select(F.col("tgt_rid").alias("__rid"))
+        .dropDuplicates()
+    )
+    return (
+        _data_rows(src.join(why_rids, "__rid")),
+        _data_rows(tgt.join(where_rids, "__rid")),
+    )
+
+
+def test_filesystem_and_in_memory_tracers_agree(spark, tmp_path):
+    """Column mappings (with NULL source rids dropped), pairs files and
+    shared passthrough snapshots answer why/where_used with exactly the
+    rows the in-memory tracer's pinned pairs give."""
+    trace_dir = os.path.join(str(tmp_path), "equiv")
+    _run(spark, EQUIV_SCRIPT, EQUIV_INPUTS, FileSystemTracer(trace_dir))
+    mem = InMemoryTracer()
+    _run(spark, EQUIV_SCRIPT, EQUIV_INPUTS, mem)
+    reader = TraceReader(spark, trace_dir)
+    # customer 3 matched no order: its NULL order rid yields no pair
+    o_j = reader.mapping("o", "j")
+    assert o_j.count() == 3 and o_j.filter(F.col("src_rid").isNull()).count() == 0
+
+    def out_rows(df):
+        return df.filter(F.col("ckey") <= 2)
+
+    expected = {
+        # why(out ckey 1, 2): orders 10-12; where_used(orders but 12)
+        "o": (
+            [(10, 1, 5), (11, 1, 7), (12, 2, 9)],
+            [(1, 2, 12)],
+            lambda df: df.filter(F.col("okey") != 12),
+        ),
+        # why(out ckey 1, 2): customers 1, 2; where_used(customers 1, 3)
+        "c": (
+            [(1,), (2,)],
+            [(1, 2, 12), (3, 0, None)],
+            lambda df: df.filter(F.col("ckey") != 2),
+        ),
+    }
+    for src, (why_rows, where_rows, src_rows) in expected.items():
+        fs_why = _data_rows(reader.why("out", src, out_rows(reader.snapshot("out"))))
+        fs_where = _data_rows(
+            reader.where_used(src, "out", src_rows(reader.snapshot(src)))
+        )
+        assert (fs_why, fs_where) == (why_rows, where_rows)
+        mem_answers = _mem_answers(
+            mem, [src, "j", "g", "latest", "out"], out_rows, src_rows
+        )
+        assert mem_answers == (fs_why, fs_where)
+
+
+def test_reader_accepts_trace_without_schema_and_columns_keys(spark, tmp_path):
+    """A trace in the layout written before schemas and column mappings
+    were recorded — every mapping a (src_rid, tgt_rid) pairs file, no
+    ``schema`` or ``columns`` keys — reads to the same answers."""
+    import shutil
+
+    new_dir = os.path.join(str(tmp_path), "new")
+    _run(spark, EQUIV_SCRIPT, EQUIV_INPUTS, FileSystemTracer(new_dir))
+    old_dir = os.path.join(str(tmp_path), "old")
+    shutil.copytree(new_dir, old_dir)
+    reader = TraceReader(spark, new_dir)
+    manifest = json.load(open(os.path.join(old_dir, "trace.json")))
+    for m in manifest["mappings"]:
+        if m.pop("columns") is not None:
+            m["path"] = f"mappings/{m['id']}.parquet"
+            reader.mapping(m["src"], m["tgt"]).write.parquet(
+                os.path.join(old_dir, m["path"])
+            )
+    for rec in manifest["tables"] + manifest["mappings"]:
+        del rec["schema"]
+    with open(os.path.join(old_dir, "trace.json"), "w") as f:
+        json.dump(manifest, f)
+    old = TraceReader(spark, old_dir)
+    assert all("columns" not in m for m in old.manifest["mappings"])
+
+    def answers(r):
+        out = r.snapshot("out").filter(F.col("ckey") <= 2)
+        orders = r.snapshot("o").filter(F.col("okey") != 12)
+        return (
+            _data_rows(r.why("out", "o", out)),
+            _data_rows(r.where_used("o", "out", orders)),
+            _data_rows(r.snapshot("g")),
+            sorted(tuple(x) for x in r.lineage("c", "out").collect()),
+        )
+
+    assert answers(old) == answers(reader)
