@@ -3362,7 +3362,10 @@ def _q_lineage_cross_world(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the filter + canonical dedup directly in SQL: the
     walk must reconstruct exactly the relation the operators computed.
     """
+    import shutil
     import tempfile
+
+    from pyspark.sql.types import StructType
 
     from python_dtl_spark.lineage import (
         FileSystemTracer,
@@ -3373,57 +3376,65 @@ def _q_lineage_cross_world(spark: SparkSession, sf_dir: str) -> DataFrame:
     from python_dtl_spark.sources import InMemoryExporter
 
     trace_dir = tempfile.mkdtemp(prefix="dtl_xworld_")
-    tracer = FileSystemTracer(trace_dir)
-    exporter = InMemoryExporter()
-    run_traced(
-        _XWORLD_SCRIPT,
-        spark=spark,
-        importer=FileSystemImporter(spark, sf_dir),
-        exporter=exporter,
-        tracer=tracer,
-    )
-    exported = exporter.tables["kept"]
-    result, mapping = dedup.exact_dedup_canonical(
-        exported, "doc_id", ["text"], with_lineage=True
-    )
-    src_uid, _ = record_pipeline_step(
-        tracer,
-        src_name="kept_corpus",
-        tgt_name="deduped",
-        src_df=exported,
-        tgt_df=result,
-        mapping=mapping,
-        src_key="doc_id",
-        tgt_key="doc_id",
-    )
-    # the cross-world hop: the EXPORT statement's synthetic rids ->
-    # the pipeline src table's natural doc_id rids, read off the
-    # export snapshot (which carries both)
-    export_rec = next(
-        t for t in tracer.tables if t.level == "EXPORT" and t.name == "kept"
-    )
-    export_snap = spark.read.parquet(f"{trace_dir}/{export_rec.path}")
-    tracer.record_mapping(
-        export_rec.id,
-        src_uid,
-        kind="by_key",
-        pairs=export_snap.select(
-            F.col(export_rec.row_id).alias("src_rid"),
-            F.col("doc_id").alias("tgt_rid"),
-        ),
-    )
-    tracer.write_manifest()
+    try:
+        tracer = FileSystemTracer(trace_dir)
+        exporter = InMemoryExporter()
+        run_traced(
+            _XWORLD_SCRIPT,
+            spark=spark,
+            importer=FileSystemImporter(spark, sf_dir),
+            exporter=exporter,
+            tracer=tracer,
+        )
+        exported = exporter.tables["kept"]
+        result, mapping = dedup.exact_dedup_canonical(
+            exported, "doc_id", ["text"], with_lineage=True
+        )
+        src_uid, _ = record_pipeline_step(
+            tracer,
+            src_name="kept_corpus",
+            tgt_name="deduped",
+            src_df=exported,
+            tgt_df=result,
+            mapping=mapping,
+            src_key="doc_id",
+            tgt_key="doc_id",
+        )
+        # the cross-world hop: the EXPORT statement's synthetic rids ->
+        # the pipeline src table's natural doc_id rids, read off the
+        # export snapshot (which carries both) with its recorded schema
+        export_rec = next(
+            t for t in tracer.tables if t.level == "EXPORT" and t.name == "kept"
+        )
+        export_snap = spark.read.schema(
+            StructType.fromJson(export_rec.schema)
+        ).parquet(f"{trace_dir}/{export_rec.path}")
+        tracer.record_mapping(
+            export_rec.id,
+            src_uid,
+            kind="by_key",
+            pairs=export_snap.select(
+                F.col(export_rec.row_id).alias("src_rid"),
+                F.col("doc_id").alias("tgt_rid"),
+            ),
+        )
+        tracer.write_manifest()
 
-    reader = TraceReader(spark, trace_dir)
-    lin = reader.lineage("docs", "deduped")
-    # synthetic import rids -> doc_ids via the import snapshot;
-    # the deduped side's rids ARE doc_ids (natural-key bridge)
-    docs_snap = reader.snapshot("docs").select(
-        F.col("__rid").alias("src_rid"), F.col("doc_id").alias("src_doc_id")
-    )
-    return lin.join(docs_snap, on="src_rid").select(
-        "src_doc_id", F.col("tgt_rid").cast("long").alias("kept_doc_id")
-    )
+        reader = TraceReader(spark, trace_dir)
+        lin = reader.lineage("docs", "deduped")
+        # synthetic import rids -> doc_ids via the import snapshot;
+        # the deduped side's rids ARE doc_ids (natural-key bridge).
+        # Collected so the trace directory can go before returning.
+        docs_snap = reader.snapshot("docs").select(
+            F.col("__rid").alias("src_rid"), F.col("doc_id").alias("src_doc_id")
+        )
+        out = lin.join(docs_snap, on="src_rid").select(
+            "src_doc_id", F.col("tgt_rid").cast("long").alias("kept_doc_id")
+        )
+        schema, rows = out.schema, out.collect()
+    finally:
+        shutil.rmtree(trace_dir, ignore_errors=True)
+    return spark.createDataFrame(rows, schema)
 
 
 _register(

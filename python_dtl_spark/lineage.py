@@ -24,7 +24,12 @@ Spark-first re-expression (SURVEY.md §2.7):
   JOIN snd ON fst.tgt_index = snd.src_index", mappings.py:310-322),
   which Catalyst executes as a broadcast/shuffled hash join;
 * mapping *composition* across statements is the same join, exposed as
-  :func:`compose` and walked transitively by :class:`TraceReader`.
+  :func:`compose`; :meth:`TraceReader.lineage` composes it along every
+  path into the full transitive relation.  Provenance questions
+  (:meth:`TraceReader.why` / :meth:`~TraceReader.where_used`) do not:
+  they push the asked rows' rids through the trace one hop at a time as
+  semi-join frontiers, so a question costs in proportion to the asked
+  rows' lineage, not to the size of the trace.
 
 Scale note: trace mode is opt-in.  Per statement it writes one
 snapshot, plus one mapping file per ``by_key``, pipeline or sampled
@@ -480,7 +485,13 @@ def compose(ab: DataFrame, bc: DataFrame) -> DataFrame:
 class TraceReader:
     """Query a written trace: snapshots, direct mappings, and transitive
     lineage between any two trace tables (the explainability UX the
-    reference's manifest enables, manifest.py:62-134)."""
+    reference's manifest enables, manifest.py:62-134).
+
+    :meth:`lineage` is the full ``(src_rid, tgt_rid)`` relation between
+    two tables.  :meth:`why` and :meth:`where_used` answer questions
+    about given rows without building it: they push those rows hop by
+    hop along the same paths, so their cost follows the asked rows'
+    lineage."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -548,84 +559,133 @@ class TraceReader:
                 out = pairs if out is None else out.unionByName(pairs)
         return out
 
-    def lineage(self, src: str, tgt: str) -> DataFrame | None:
-        """Transitive (src_rid, tgt_rid) relation from ``src`` to ``tgt``
-        composed along every mapping path.
+    def _path(self, src: str, tgt: str) -> tuple[list[str], list[dict]]:
+        """The tables on some ``src → tgt`` mapping path — those
+        reachable from ``src`` that can also reach ``tgt`` — in
+        topological order, and the mapping records between them, sorted
+        by their source's place in that order.  ``([], [])`` when there
+        is no path; ``([src], [])`` when ``src == tgt``.
 
-        Nodes are processed in topological order (Kahn over the
-        reachable subgraph), so a node's out-edges expand only after
-        every in-path has been merged into its reach set.  A plain BFS
-        expands a node the first time it is reached; in diamond-shaped
-        graphs with unequal path lengths the late-arriving path's pairs
-        would never reach the node's descendants.  The trace graph is a
-        DAG by construction (mapping targets are always created after
-        their sources), so the topological order always exists.
+        Walking the records in this order (or its reverse) reaches a
+        table only after every path into it (or out of it) has been
+        merged.  A plain BFS expands a table the first time it is
+        reached; in diamond-shaped graphs with unequal path lengths the
+        late-arriving path would never reach the table's descendants.
+        The trace graph is a DAG by construction (mapping targets are
+        always created after their sources), so the order always exists.
         """
+        edges: dict[str, dict[str, list[dict]]] = {"src": {}, "tgt": {}}
+        for m in self.manifest["mappings"]:
+            edges["src"].setdefault(m["src"], []).append(m)
+            edges["tgt"].setdefault(m["tgt"], []).append(m)
+
+        def reach(start: str, side: str, other: str) -> set[str]:
+            seen, stack = {start}, [start]
+            while stack:
+                for m in edges[side].get(stack.pop(), []):
+                    if m[other] not in seen:
+                        seen.add(m[other])
+                        stack.append(m[other])
+            return seen
+
+        on_path = reach(src, "src", "tgt") & reach(tgt, "tgt", "src")
+        if not on_path:
+            return [], []
+        # Kahn's algorithm over the path subgraph (multi-edges count
+        # once per edge)
+        out = {
+            n: [m for m in edges["src"].get(n, []) if m["tgt"] in on_path]
+            for n in on_path
+        }
+        indeg = dict.fromkeys(on_path, 0)
+        for ms in out.values():
+            for m in ms:
+                indeg[m["tgt"]] += 1
+        ready, order, records = [src], [], []
+        while ready:
+            node = ready.pop()
+            order.append(node)
+            records += out[node]
+            for m in out[node]:
+                indeg[m["tgt"]] -= 1
+                if indeg[m["tgt"]] == 0:
+                    ready.append(m["tgt"])
+        return order, records
+
+    def lineage(self, src: str, tgt: str) -> DataFrame | None:
+        """The full transitive ``(src_rid, tgt_rid)`` relation from
+        ``src`` to ``tgt``, composed along every mapping path of
+        :meth:`_path`; None when there is no path.  Its cost grows with
+        the mappings on the path, not with any question: :meth:`why` and
+        :meth:`where_used` do not build it."""
         src, tgt = self.table_id(src), self.table_id(tgt)
         if src == tgt:
             snap = self.snapshot(src)
             return snap.select(
                 F.col("__rid").alias("src_rid"), F.col("__rid").alias("tgt_rid")
             )
-        out_edges: dict[str, list[dict]] = {}
-        for m in self.manifest["mappings"]:
-            out_edges.setdefault(m["src"], []).append(m)
-        # nodes reachable from src
-        reachable = {src}
-        stack = [src]
-        while stack:
-            for m in out_edges.get(stack.pop(), []):
-                if m["tgt"] not in reachable:
-                    reachable.add(m["tgt"])
-                    stack.append(m["tgt"])
-        # Kahn's algorithm over the reachable subgraph (multi-edges
-        # count once per edge)
-        indeg = {n: 0 for n in reachable}
-        for n in reachable:
-            for m in out_edges.get(n, []):
-                if m["tgt"] in reachable:
-                    indeg[m["tgt"]] += 1
-        ready = [src]
-        order: list[str] = []
-        while ready:
-            node = ready.pop()
-            order.append(node)
-            for m in out_edges.get(node, []):
-                t = m["tgt"]
-                indeg[t] -= 1
-                if indeg[t] == 0:
-                    ready.append(t)
         # reach[t] = composed (src_rid → t rid) mapping, complete by the
-        # time t itself is expanded
+        # time t's out-edges are walked
         reach: dict[str, DataFrame] = {}
-        for node in order:
-            for m in out_edges.get(node, []):
-                pairs = self._pairs(m)
-                step = pairs if node == src else compose(reach[node], pairs)
-                if m["tgt"] in reach:
-                    reach[m["tgt"]] = (
-                        reach[m["tgt"]]
-                        .unionByName(step)
-                        .dropDuplicates(["src_rid", "tgt_rid"])
-                    )
-                else:
-                    reach[m["tgt"]] = step
+        for m in self._path(src, tgt)[1]:
+            pairs = self._pairs(m)
+            step = pairs if m["src"] == src else compose(reach[m["src"]], pairs)
+            if m["tgt"] in reach:
+                reach[m["tgt"]] = (
+                    reach[m["tgt"]]
+                    .unionByName(step)
+                    .dropDuplicates(["src_rid", "tgt_rid"])
+                )
+            else:
+                reach[m["tgt"]] = step
         return reach.get(tgt)
+
+    def _push(
+        self, src_table: str, tgt_table: str, rows: DataFrame, backward: bool
+    ) -> DataFrame:
+        """Push ``rows``' ``__rid``s through every ``src → tgt`` path one
+        hop at a time — backwards from ``tgt`` rows when ``backward``,
+        else forwards from ``src`` rows — and return the far end's
+        snapshot rows (``__rid`` first) that the walk reaches.
+
+        A table's frontier is the union, over its path edges, of the
+        edge's pairs ``LEFT SEMI JOIN`` the frontier at the edge's near
+        end, projected to the rid at the far end.  A semi-join never
+        duplicates a row, so no step needs a ``dropDuplicates``; the
+        frontiers may repeat a rid, and the last semi-join absorbs it."""
+        src, tgt = self.table_id(src_table), self.table_id(tgt_table)
+        tables, records = self._path(src, tgt)
+        if not tables:
+            raise KeyError(f"no lineage path {src_table!r} → {tgt_table!r}")
+        near, far = ("tgt", "src") if backward else ("src", "tgt")
+        start, end = (tgt, src) if backward else (src, tgt)
+        frontier = {start: rows.select("__rid")}
+        for m in reversed(records) if backward else records:
+            step = (
+                self._pairs(m)
+                .join(
+                    frontier[m[near]],
+                    F.col(f"{near}_rid") == F.col("__rid"),
+                    "left_semi",
+                )
+                .select(F.col(f"{far}_rid").alias("__rid"))
+            )
+            reached = frontier.get(m[far])
+            frontier[m[far]] = step if reached is None else reached.unionByName(step)
+        # a USING semi-join puts the key (__rid) first, then the data columns
+        return self.snapshot(end).join(frontier[end], on="__rid", how="left_semi")
 
     def why(self, tgt_table: str, src_table: str, tgt_rows: DataFrame) -> DataFrame:
         """Explain: given rows of ``tgt_table`` (must carry ``__rid``),
-        return the contributing rows of ``src_table`` (with ``__rid``)."""
-        pairs = self.lineage(src_table, tgt_table)
-        if pairs is None:
-            raise KeyError(f"no lineage path {src_table!r} → {tgt_table!r}")
-        src_snap = self.snapshot(src_table)
-        wanted = tgt_rows.select(F.col("__rid").alias("tgt_rid")).dropDuplicates()
-        keep = (
-            pairs.join(wanted, on="tgt_rid")
-            .select(F.col("src_rid").alias("__rid"))
-            .dropDuplicates()
-        )
-        return src_snap.join(keep, on="__rid")
+        return the contributing rows of ``src_table`` (``__rid`` first,
+        then the data columns).
+
+        The asked rows are pushed backwards through the trace hop by
+        hop, so a question costs in proportion to those rows' lineage,
+        not to the whole ``src → tgt`` relation (that is
+        :meth:`lineage`).  ``why(t, t, rows)`` returns ``rows``'
+        snapshot rows."""
+        return self._push(src_table, tgt_table, tgt_rows, backward=True)
 
     def where_used(
         self, src_table: str, tgt_table: str, src_rows: DataFrame
@@ -633,16 +693,6 @@ class TraceReader:
         """Forward provenance, symmetric to :meth:`why`: given rows of
         ``src_table`` (must carry ``__rid``), return the rows of
         ``tgt_table`` they contributed to — "if I delete/fix these
-        inputs, which outputs change?".  Same transitive pair relation,
-        filtered on the source side."""
-        pairs = self.lineage(src_table, tgt_table)
-        if pairs is None:
-            raise KeyError(f"no lineage path {src_table!r} → {tgt_table!r}")
-        tgt_snap = self.snapshot(tgt_table)
-        wanted = src_rows.select(F.col("__rid").alias("src_rid")).dropDuplicates()
-        keep = (
-            pairs.join(wanted, on="src_rid")
-            .select(F.col("tgt_rid").alias("__rid"))
-            .dropDuplicates()
-        )
-        return tgt_snap.join(keep, on="__rid")
+        inputs, which outputs change?".  The asked rows are pushed
+        forwards hop by hop, at a cost in proportion to their lineage."""
+        return self._push(src_table, tgt_table, src_rows, backward=False)

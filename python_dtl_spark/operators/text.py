@@ -256,9 +256,14 @@ def tfidf_top_terms(
     forcing ``count(tf)`` produced no ReusedExchange, and persisting
     tf measured as a loss) — which ran the corpus tokenize+explode+
     aggregate TWICE per query.  The window computes the identical df
-    on the single tf pass (count over an unordered partition — no
-    sort, no join), one fewer corpus pass and one fewer exchange at
-    any scale.
+    on the single tf pass (count over an unordered partition, no
+    join): one fewer corpus pass and one fewer exchange.  It is not
+    sort-free — ``WindowExec`` still sorts each partition on ``term``
+    — and it has no map-side partial count: every tf row of a term
+    lands in one window task, so a hot (stopword-class) term that
+    occurs in nearly every document makes that task corpus-sized
+    (single-task skew, spill).  Where hot terms are realistic, a
+    salted two-level count or the ``groupBy`` form avoids the skew.
 
     Deliberately NOT ``spread()`` (round-6 tried it, round-7 probed
     it): unlike the census, whose md5-per-window map stage dominates

@@ -9,10 +9,12 @@ and transitive lineage ("which import rows produced this output row").
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from python_dtl_spark.lineage import (
@@ -225,6 +227,17 @@ def test_filesystem_trace_and_reader(spark, tmp_path):
     assert (origin[0].key, origin[0].value) == (6, 60)
 
 
+DIAMOND_SCRIPT = """
+    WITH a AS IMPORT 'a';
+    WITH short AS SELECT key, value FROM a WHERE value > 30;
+    WITH l1 AS SELECT key, value FROM a WHERE value > 0;
+    WITH longer AS SELECT key, value FROM l1 WHERE value < 35;
+    WITH merged AS short UNION longer;
+    WITH final AS SELECT key FROM merged;
+    EXPORT final TO 'out';
+    """
+
+
 def test_lineage_diamond_unequal_path_lengths(spark, tmp_path):
     # Diamond: a → short (1 hop) and a → l1 → longer (2 hops) merge in
     # `merged`, whose descendant is `final`.  A naive BFS expands
@@ -234,20 +247,7 @@ def test_lineage_diamond_unequal_path_lengths(spark, tmp_path):
     # short filter but passes the longer one).
     trace_dir = os.path.join(str(tmp_path), "trace")
     tracer = FileSystemTracer(trace_dir)
-    _run(
-        spark,
-        """
-        WITH a AS IMPORT 'a';
-        WITH short AS SELECT key, value FROM a WHERE value > 30;
-        WITH l1 AS SELECT key, value FROM a WHERE value > 0;
-        WITH longer AS SELECT key, value FROM l1 WHERE value < 35;
-        WITH merged AS short UNION longer;
-        WITH final AS SELECT key FROM merged;
-        EXPORT final TO 'out';
-        """,
-        {"a": NUMS},
-        tracer,
-    )
+    _run(spark, DIAMOND_SCRIPT, {"a": NUMS}, tracer)
     reader = TraceReader(spark, trace_dir)
     pairs = reader.lineage("a", "final")
     a_snap = reader.snapshot("a")
@@ -346,6 +346,11 @@ def test_mapping_only_mode_skips_statement_snapshots(spark, tmp_path):
     assert reader.snapshot("out").count() == 3
     with pytest.raises(ValueError, match="mapping-only"):
         reader.snapshot("big")
+    # a question that ends at a mapping-only table has no rows to return
+    out = reader.snapshot("out")
+    assert reader.where_used("out", "out", out).count() == 3
+    with pytest.raises(ValueError, match="mapping-only"):
+        reader.why("out", "a", out)
 
 
 def test_mapping_sample_mode_deterministic_subset(spark, tmp_path):
@@ -1114,3 +1119,110 @@ def test_reader_accepts_trace_without_schema_and_columns_keys(spark, tmp_path):
         )
 
     assert answers(old) == answers(reader)
+
+
+def _sorted_rows(df):
+    return df.columns, sorted(tuple(r) for r in df.collect())
+
+
+def _rows_by_tag(frames):
+    """Each frame's rows as sorted JSON strings, collected in one job."""
+    tagged = [
+        df.select(
+            F.lit(tag).alias("tag"), F.to_json(F.struct(*df.columns)).alias("row")
+        )
+        for tag, df in frames.items()
+    ]
+    out = {}
+    for r in functools.reduce(DataFrame.unionByName, tagged).collect():
+        out.setdefault(r["tag"], []).append(r["row"])
+    return {tag: sorted(rows) for tag, rows in out.items()}
+
+
+def _half(df):
+    return df.filter(F.col("__rid") % 2 == 0)
+
+
+def _rows_via(pairs, near, far, asked, snap):
+    """The rows of ``snap`` that ``pairs`` relate to the ``asked`` rows,
+    the answer derived from the full lineage relation."""
+    rids = (
+        pairs.join(asked.select(F.col("__rid").alias(near)), near)
+        .select(F.col(far).alias("__rid"))
+        .dropDuplicates()
+    )
+    return snap.join(rids, "__rid")
+
+
+@pytest.mark.parametrize(
+    "script, inputs",
+    [(DIAMOND_SCRIPT, {"a": NUMS}), (EQUIV_SCRIPT, EQUIV_INPUTS)],
+    ids=["diamond", "equiv"],
+)
+def test_why_and_where_used_equal_full_lineage_answers(
+    spark, tmp_path, script, inputs
+):
+    """For every table pair with a path, pushing the asked rows hop by
+    hop gives exactly the rows (and columns) the full ``lineage()``
+    relation joined to the snapshots gives."""
+    trace_dir = os.path.join(str(tmp_path), "trace")
+    _run(spark, script, inputs, FileSystemTracer(trace_dir))
+    reader = TraceReader(spark, trace_dir)
+    ids = [t["id"] for t in reader.tables()]
+    checked = 0
+    for src in ids:
+        for tgt in ids:
+            pairs = reader.lineage(src, tgt)
+            if pairs is None:
+                continue
+            src_snap, tgt_snap = reader.snapshot(src), reader.snapshot(tgt)
+            answers = {
+                "why": reader.why(tgt, src, _half(reader.snapshot(tgt))),
+                "why_lineage": _rows_via(
+                    pairs, "tgt_rid", "src_rid", _half(tgt_snap), src_snap
+                ),
+                "where": reader.where_used(src, tgt, _half(reader.snapshot(src))),
+                "where_lineage": _rows_via(
+                    pairs, "src_rid", "tgt_rid", _half(src_snap), tgt_snap
+                ),
+            }
+            rows = _rows_by_tag(answers)
+            for q in ("why", "where"):
+                lin = f"{q}_lineage"
+                assert answers[q].columns == answers[lin].columns
+                assert rows.get(q) == rows.get(lin), (src, tgt, q)
+            checked += 1
+    # every table reaches itself and at least one other table
+    assert checked > len(ids)
+
+
+def test_why_and_where_used_plans_have_no_aggregate(spark, tmp_path):
+    """Questions walk semi-join frontiers: no composition, no
+    dropDuplicates, so the optimized plans hold no Aggregate."""
+    trace_dir = os.path.join(str(tmp_path), "equiv")
+    _run(spark, EQUIV_SCRIPT, EQUIV_INPUTS, FileSystemTracer(trace_dir))
+    reader = TraceReader(spark, trace_dir)
+    out = reader.snapshot("out").filter(F.col("ckey") <= 2)
+    orders = reader.snapshot("o").filter(F.col("okey") != 12)
+    for df in (reader.why("out", "o", out), reader.where_used("o", "out", orders)):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "Aggregate" not in plan and "Deduplicate" not in plan
+        assert "Join LeftSemi" in plan
+
+
+def test_questions_without_path_raise_and_same_table_is_identity(spark, tmp_path):
+    trace_dir = os.path.join(str(tmp_path), "equiv")
+    _run(spark, EQUIV_SCRIPT, EQUIV_INPUTS, FileSystemTracer(trace_dir))
+    reader = TraceReader(spark, trace_dir)
+    orders = reader.snapshot("o")
+    # o and c are both imports: neither reaches the other
+    with pytest.raises(KeyError, match="no lineage path"):
+        reader.why("c", "o", reader.snapshot("c"))
+    with pytest.raises(KeyError, match="no lineage path"):
+        reader.where_used("out", "o", reader.snapshot("out"))
+    with pytest.raises(KeyError, match="no trace table"):
+        reader.why("out", "nope", reader.snapshot("out"))
+    asked = orders.filter(F.col("okey") >= 12)
+    expected = _sorted_rows(asked.select("__rid", "okey", "ckey", "price"))
+    assert _sorted_rows(reader.why("o", "o", asked)) == expected
+    assert _sorted_rows(reader.where_used("o", "o", asked)) == expected
