@@ -118,7 +118,11 @@ _sources_mod.INVALIDATION_HOOKS.append(_clear_table_memo)
 
 
 def _memoized(spark: SparkSession, sf_dir: str, table: str, build):
-    key = (spark.sparkContext.applicationId, sf_dir, table)
+    app = spark.sparkContext.applicationId
+    # handles of a stopped session pin it through py4j; drop them
+    for stale in [key for key in _TABLE_MEMO if key[0] != app]:
+        del _TABLE_MEMO[stale]
+    key = (app, sf_dir, table)
     df = _TABLE_MEMO.get(key)
     if df is None:
         df = build()
@@ -137,15 +141,17 @@ def _dtl(script: str, output: str = "output"):
             # catalog: pre-seed it from the shared memo and capture new
             # handles back, so repeated IMPORTs of the same table across
             # queries list/footer-read once per session
+            # (synthetic keys such as _read_events' "events@..." are
+            # the catalog's own, not DTL table names)
             key_prefix = (spark.sparkContext.applicationId, sf_dir)
             for (app, root, tbl), df in _TABLE_MEMO.items():
-                if (app, root) == key_prefix:
+                if (app, root) == key_prefix and "@" not in tbl:
                     importer._memo[tbl] = df
             orig_import = importer.import_table
 
             def import_table(name):
                 df = orig_import(name)
-                _TABLE_MEMO.setdefault((*key_prefix, name), df)
+                _memoized(spark, sf_dir, name, lambda: df)
                 return df
 
             importer.import_table = import_table
@@ -8394,16 +8400,19 @@ def _q_knn_classify(spark, sf_dir):
 
     SF bound: this row is defined up to embeddings-corpus sizes of
     MAX_BROADCAST_QUERIES (100k vectors — driver scale factors top out
-    at sf0.1 ≈ 2k, 50× under it).  Beyond that the guard raises BY
-    DESIGN — the exact tier is the oracle-bearing baseline, never the
-    scale path; embed_knn_classify_lsh is.  bench.py degrades a raising
-    query to an error row, so even a guard refusal cannot abort a
-    whole bench run."""
+    at sf0.1 ≈ 2k, 50× under it).  Beyond that the exact tier's
+    bounded collect of its query side (here the corpus itself) raises
+    BY DESIGN — the exact tier is the oracle-bearing baseline, never
+    the scale path; embed_knn_classify_lsh is.  bench.py degrades a
+    raising query to an error row, so even a guard refusal cannot
+    abort a whole bench run.
+
+    Scale shape: besides the table read, one construct job (that
+    collect); the action scores the corpus in the fold kernel, chunk
+    by chunk, keeping each chunk's per-query top-k before the ranking
+    window."""
     emb = _read(spark, sf_dir, "embeddings")
-    # corpus size = query count in leave-one-out, so pass it as the
-    # MAX_BROADCAST_QUERIES guard hint the flat tier documents —
-    # parquet metadata-only count, no data scan
-    return similarity.knn_classify(emb, k=10, num_vectors=emb.count()).select(
+    return similarity.knn_classify(emb, k=10).select(
         "vec_id", "predicted_label", "votes"
     )
 

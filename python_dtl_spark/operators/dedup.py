@@ -694,7 +694,11 @@ def merge_crawl_into_index(
     ``crawl``'s rows under the same ``(n, num_hashes, bands)``
     (bucket construction is strictly per-document, so the probe's
     banding of the same text IS that — pinned by
-    ``test_crawl_delta_returned_buckets_equal_band_index``)."""
+    ``test_crawl_delta_returned_buckets_equal_band_index``).  A row
+    whose ``band`` lies outside ``[0, bands)`` fails the merge when it
+    runs (``raise_error`` in the plan, no extra job): the buckets were
+    banded under other parameters.  A banding with the same ``bands``
+    but another ``n``/``num_hashes`` cannot be told apart this way."""
     expected = {id_col, "band", "bucket"}
     if not expected.issubset(set(corpus_buckets.columns)):
         raise ValueError(
@@ -710,10 +714,28 @@ def merge_crawl_into_index(
             num_hashes=num_hashes,
             bands=bands,
         )
-    elif not expected.issubset(set(crawl_buckets.columns)):
-        raise ValueError(
-            f"crawl_buckets must carry columns {sorted(expected)} (a "
-            f"minhash_band_buckets output); got {crawl_buckets.columns}"
+    else:
+        if not expected.issubset(set(crawl_buckets.columns)):
+            raise ValueError(
+                f"crawl_buckets must carry columns {sorted(expected)} (a "
+                f"minhash_band_buckets output); got {crawl_buckets.columns}"
+            )
+        # a banding under another ``bands`` shows as an out-of-range
+        # band; the check rides the union's projection (no extra job)
+        band = F.col("band")
+        crawl_buckets = crawl_buckets.select(
+            id_col,
+            F.when(band.between(0, bands - 1), band)
+            .otherwise(
+                F.raise_error(
+                    F.concat(
+                        F.lit(f"crawl_buckets band outside [0, {bands}): "),
+                        F.coalesce(band.cast("string"), F.lit("NULL")),
+                    )
+                )
+            )
+            .alias("band"),
+            "bucket",
         )
     return corpus_buckets.select(id_col, "band", "bucket").unionByName(
         crawl_buckets.select(id_col, "band", "bucket")

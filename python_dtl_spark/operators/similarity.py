@@ -1,8 +1,10 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Baseline: brute-force cosine top-k — a broadcast join of the (small)
-query set against the corpus, dot products via ``zip_with``/``aggregate``
-(JVM-side, no Python), ranking via a window partitioned by query (scales:
+Baseline: exact cosine top-k — the (small) query set is collected once
+and broadcast, the corpus streams through a ``mapInArrow`` numpy kernel
+that folds dot products one dimension at a time (bit-identical to the
+SQL ``zip_with``/``aggregate`` fold) and keeps each chunk's per-query
+top-k, and a window partitioned by query ranks the survivors (scales:
 each query's ranking is an independent partition).
 
 Scale path: IVF-style bucketed search — corpus pre-partitioned into
@@ -16,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from python_dtl_spark.operators.partitioning import spread as _spread
 
@@ -72,6 +75,12 @@ def _infer_dim(df, vec_col: str) -> int:
     return len(row[0])
 
 
+#: Corpus rows × queries scored per kernel step in :func:`cosine_topk`.
+#: Bounds each float64 work matrix (dot products, cosines, sort keys)
+#: to 4 MB; a chunk keeps at least one corpus row however many queries.
+_KERNEL_CELLS = 1 << 19
+
+
 #: Above this many query vectors, the broadcast side of the exact scan
 #: stops being "small": the driver must collect and every executor must
 #: hold queries × dim × 8 bytes (1M × 64-dim doubles ≈ 512 MB) — use
@@ -99,9 +108,32 @@ def cosine_topk(
     (not per query), legal only while the query set broadcasts — every
     executor holds all query vectors (queries × dim × 8 bytes each).
     Pass ``num_queries`` when known; beyond ``MAX_BROADCAST_QUERIES``
-    the call refuses (action-free — it will not count a lazy query set)
-    and the caller should switch to :func:`lsh_bucketed_topk` or
-    :func:`ivf_topk`.
+    the call refuses before any job runs and the caller should switch
+    to :func:`lsh_bucketed_topk` or :func:`ivf_topk`.  Without the
+    hint, the one job this call runs — a collect of at most
+    ``MAX_BROADCAST_QUERIES + 1`` query rows — enforces the same bound.
+
+    Scale shape: the collected queries ship once per executor as a
+    broadcast (ids, one float64 matrix per vector length, norms), and the
+    corpus streams through a ``mapInArrow`` kernel in chunks of at most
+    ``_KERNEL_CELLS`` corpus-row × query cells.  Each chunk keeps, per
+    query, only the candidates at or above its own k-th best cosine
+    (ties kept), so the ranking window sees about chunks × queries × k
+    rows instead of corpus × queries.
+
+    Values are bit-identical to the SQL fold ``aggregate(zip_with(c, q,
+    x * y), 0.0, acc + x)`` divided by the product of the two norms
+    folded the same way: the kernel adds one dimension at a time,
+    left to right, with separate multiply and add ufuncs (a BLAS
+    product or a fused multiply-add would reorder or fuse the sums).
+    Spark's semantics carry over: a NULL vector, a NULL element or a
+    dimension mismatch gives a NULL cosine; a zero divisor (a zero
+    vector) gives NULL, or raises ``DIVIDE_BY_ZERO`` when
+    ``spark.sql.ansi.enabled`` is on; the order is NaN first, then
+    descending values with ``-0.0`` tied to ``0.0``, NULL last.  With
+    ``include_self=False`` a pair is dropped when its ids are equal or
+    either id is NULL, as ``neighbor_id != query_id`` does; the two id
+    columns must then share a type.
     """
     if num_queries is not None and num_queries > MAX_BROADCAST_QUERIES:
         raise ValueError(
@@ -112,24 +144,185 @@ def cosine_topk(
         )
     c = _spread(corpus).select(
         F.col(id_col).alias("neighbor_id"), _to_double(F.col(vec_col)).alias("__cv")
-    ).withColumn("__cn", _norm(F.col("__cv")))
+    )
     q = queries.select(
         F.col(query_id_col).alias("query_id"), _to_double(F.col(vec_col)).alias("__qv")
-    ).withColumn("__qn", _norm(F.col("__qv")))
-    joined = c.join(broadcast(q), how="cross")
-    if not include_self:
-        joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = joined.withColumn(
-        "cosine", _dot(F.col("__cv"), F.col("__qv")) / (F.col("__cn") * F.col("__qn"))
     )
+    q_type = q.schema["query_id"].dataType
+    c_type = c.schema["neighbor_id"].dataType
+    if not include_self and q_type != c_type:
+        raise ValueError(
+            "cosine_topk(include_self=False) compares query and corpus "
+            f"ids; their types differ ({q_type.simpleString()} vs "
+            f"{c_type.simpleString()}) — cast one side first"
+        )
+    collected = q.limit(MAX_BROADCAST_QUERIES + 1).toArrow()
+    if collected.num_rows > MAX_BROADCAST_QUERIES:
+        raise ValueError(
+            f"cosine_topk broadcasts the query set to every executor; "
+            f"more than MAX_BROADCAST_QUERIES={MAX_BROADCAST_QUERIES} "
+            f"queries arrived. Use lsh_bucketed_topk or ivf_topk for "
+            f"large query sets."
+        )
+    ansi = corpus.sparkSession.conf.get("spark.sql.ansi.enabled").lower() == "true"
+    schema = StructType(
+        [
+            StructField("query_id", q_type),
+            StructField("neighbor_id", c_type),
+            StructField("cosine", DoubleType()),
+        ]
+    )
+    kernel = _cosine_kernel(corpus.sparkSession, collected, k, include_self, ansi)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id")
     )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        c.mapInArrow(kernel, schema)
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "cosine")
     )
+
+
+def _cosine_kernel(spark, collected, k: int, include_self: bool, ansi: bool):
+    """The ``mapInArrow`` function of :func:`cosine_topk`: the query
+    side (``collected``: query_id, __qv) is prepared here and broadcast
+    once; the returned closure scores (neighbor_id, __cv) batches.
+
+    Everything the closure calls is defined in this function so that it
+    ships by value and the workers never import this package.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    null_key = np.iinfo(np.int64).min
+
+    def prepare(vecs):
+        """Per row of a list<double> array: whether it has no NULL
+        vector and no NULL element, its start offset, its length; and
+        the flat values."""
+        offsets = vecs.offsets.to_numpy()
+        values = vecs.values
+        ok = ~vecs.is_null().to_numpy(zero_copy_only=False)
+        if values.null_count:
+            nulls = np.cumsum(values.is_null().to_numpy(zero_copy_only=False))
+            nulls = np.concatenate(([0], nulls))
+            ok &= nulls[offsets[1:]] == nulls[offsets[:-1]]
+        vals = values.to_numpy(zero_copy_only=False)
+        return ok, offsets[:-1], np.diff(offsets), vals
+
+    def by_length(prepared, lo, hi):
+        """Rows ``lo:hi`` that have a fold, grouped by length: (length,
+        row offsets from ``lo``, values as a length × rows matrix)."""
+        ok, start, length, vals = prepared
+        rows = np.nonzero(ok[lo:hi])[0]
+        lengths = length[lo:hi][rows]
+        groups = []
+        for n in np.unique(lengths):
+            sel = rows[lengths == n]
+            at = start[lo + sel][None, :] + np.arange(n)[:, None]
+            groups.append((int(n), sel, vals[at]))
+        return groups
+
+    def fold_dot(at, bt):
+        """acc[i, j] = (((0.0 + a0*b0) + a1*b1) + ...) over dimensions,
+        as ``aggregate(zip_with(a, b, x * y), 0.0, acc + x)`` sums."""
+        acc = np.zeros((at.shape[1], bt.shape[1]))
+        prod = np.empty_like(acc)
+        with np.errstate(all="ignore"):  # inf and NaN are values here
+            for a, b in zip(at, bt):
+                np.multiply(a[:, None], b[None, :], out=prod)
+                np.add(acc, prod, out=acc)
+        return acc
+
+    def fold_norm(at):
+        acc = np.zeros(at.shape[1])
+        with np.errstate(all="ignore"):
+            for a in at:
+                acc = np.add(acc, np.multiply(a, a))
+        return np.sqrt(acc)
+
+    qids = collected.column("query_id").combine_chunks()
+    qvecs = collected.column("__qv").combine_chunks()
+    m = len(qids)
+    query_groups = {
+        n: (cols, qt, fold_norm(qt)) for n, cols, qt in by_length(prepare(qvecs), 0, m)
+    }
+    q_null = qids.is_null().to_numpy(zero_copy_only=False)
+    q_code = pc.index_in(qids, value_set=qids).fill_null(-2).to_numpy()
+    b_query = spark.sparkContext.broadcast((qids, q_null, q_code, query_groups))
+    step = max(1, _KERNEL_CELLS // max(m, 1))
+
+    def chunk_cosines(prepared, lo, hi, groups):
+        """(cosine, null mask, zero-divisor mask) of rows lo:hi × all
+        queries; pairs without a fold are NULL."""
+        cos = np.full((hi - lo, m), np.nan)
+        null = np.ones((hi - lo, m), dtype=bool)
+        zero = np.zeros((hi - lo, m), dtype=bool)
+        for n, rows, ct in by_length(prepared, lo, hi):
+            if n not in groups:
+                continue
+            cols, qt, qn = groups[n]
+            with np.errstate(all="ignore"):
+                den = np.multiply(fold_norm(ct)[:, None], qn[None, :])
+                block = np.divide(fold_dot(ct, qt), den)
+            if len(rows) == hi - lo and len(cols) == m:
+                cos, null, zero = block, den == 0.0, den == 0.0
+            else:
+                at = np.ix_(rows, cols)
+                cos[at], null[at], zero[at] = block, den == 0.0, den == 0.0
+        return cos, null, zero
+
+    def kernel(batches):
+        if k < 1:
+            return
+        qids, q_null, q_code, groups = b_query.value
+        for batch in batches:
+            cids, prepared = batch.column(0), prepare(batch.column(1))
+            if not include_self:
+                c_null = cids.is_null().to_numpy(zero_copy_only=False)
+                c_code = pc.index_in(cids, value_set=qids).fill_null(-1).to_numpy()
+            for lo in range(0, batch.num_rows, step):
+                hi = min(lo + step, batch.num_rows)
+                cos, null, zero = chunk_cosines(prepared, lo, hi, groups)
+                if include_self:
+                    excluded = np.zeros_like(null)
+                else:
+                    excluded = (
+                        (c_code[lo:hi, None] == q_code[None, :])
+                        | c_null[lo:hi, None]
+                        | q_null[None, :]
+                    )
+                if ansi and (zero & ~excluded).any():
+                    raise ArithmeticError(
+                        "[DIVIDE_BY_ZERO] Division by zero: cosine_topk "
+                        "scored a zero-norm vector (spark.sql.ansi.enabled)"
+                    )
+                # sort key: int64 order of the cosine bits, -0.0 folded
+                # into 0.0, one canonical NaN above +inf, NULL lowest
+                canon = np.where(np.isnan(cos), np.nan, cos + 0.0)
+                key = canon.view(np.int64)
+                key = np.where(key < 0, key ^ np.int64(0x7FFFFFFFFFFFFFFF), key)
+                key[null | excluded] = null_key
+                rows = hi - lo
+                keep = ~excluded
+                if rows > k:
+                    kth = np.partition(key, rows - k, axis=0)[rows - k]
+                    keep &= key >= kth[None, :]
+                ii, jj = np.nonzero(keep)
+                if len(ii) == 0:
+                    continue
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        qids.take(pa.array(jj)),
+                        cids.take(pa.array(lo + ii)),
+                        pa.array(cos[ii, jj], mask=null[ii, jj]),
+                    ],
+                    names=["query_id", "neighbor_id", "cosine"],
+                )
+
+    return kernel
 
 
 def lsh_bucketed_topk(
@@ -748,10 +941,12 @@ def knn_classify(
     neighbors out-vote its own label is a labeling-error candidate).
 
     ``method`` picks the neighbor stage: ``"exact"`` (cosine_topk —
-    the brute-force baseline, corpus × corpus, legal while the corpus
-    broadcasts; pass ``num_vectors`` — the corpus size — so the
-    MAX_BROADCAST_QUERIES guard can refuse oversized flat scans
-    action-free, like every flat tier here) or ``"lsh"`` (lsh_bucketed_topk — the 100 TB path:
+    the brute-force baseline, corpus × corpus through its fold kernel
+    with per-chunk top-k pruning, legal while the corpus broadcasts;
+    its bounded collect of the query side refuses a corpus beyond
+    MAX_BROADCAST_QUERIES, and ``num_vectors`` — the corpus size, when
+    known — refuses before any job runs) or ``"lsh"``
+    (lsh_bucketed_topk — the 100 TB path:
     bucketed candidates, one shuffle, no all-pairs stage;
     ``method_kwargs`` pass through: planes, multiprobe_bits, dim).
     Everything after the neighbor stage is identical.
@@ -765,8 +960,9 @@ def knn_classify(
     against the narrow (id, label) projection (AQE picks broadcast
     while labels are small) → count votes per (query, label) → one
     WindowGroupLimit-prunable row_number to keep each query's winning
-    label.  Nothing collects; the vote table is at most corpus × k
-    rows and aggregates map-side first.
+    label.  Only the exact tier collects (its query side, which is the
+    corpus); the vote table is at most corpus × k rows and aggregates
+    map-side first.
     """
     queries = corpus.select(F.col(id_col).alias("query_id"), F.col(vec_col))
     if method == "exact":

@@ -43,8 +43,9 @@ AUDITED = {
         "content key"
     ),
     "similarity_topk_cosine": (
-        "query side broadcast; dot products in whole-stage codegen (no "
-        "Python eval); per-query window ranking"
+        "query side collected once into a broadcast variable; corpus "
+        "scored by one MapInArrow fold kernel that keeps each chunk's "
+        "per-query top-k (no pair join); per-query window ranking"
     ),
     "dtl_q8_market_share": (
         "7-way join, every dimension broadcast (no SortMergeJoin, no "
@@ -264,10 +265,11 @@ AUDITED = {
         "event_type aggregate, with map-side partials"
     ),
     "embed_knn_classify": (
-        "exact kNN tier: corpus x broadcast-query flat scan (guarded "
-        "by MAX_BROADCAST_QUERIES; the lsh method is the bucketed "
-        "scale path), vote counts aggregate map-side, winner pick is "
-        "a WindowGroupLimit-prunable rank-1 filter"
+        "exact kNN tier: corpus x broadcast-query flat scan in one "
+        "MapInArrow fold kernel (query collect bounded by "
+        "MAX_BROADCAST_QUERIES; the lsh method is the bucketed scale "
+        "path), vote counts aggregate map-side, winner pick is a "
+        "WindowGroupLimit-prunable rank-1 filter"
     ),
     "events_mad_outliers": (
         "median and MAD each one partial+final percentile agg on the "

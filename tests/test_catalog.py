@@ -551,3 +551,56 @@ def test_table_memo_is_opt_in_and_result_preserving(spark, monkeypatch):
     FileSystemImporter(spark, sf_dir).invalidate()
     assert not cat._TABLE_MEMO
     cat._clear_table_memo()
+
+
+def test_table_memo_evicts_other_sessions_handles(spark, monkeypatch):
+    """A handle memoized under another applicationId (a stopped session)
+    is dropped on the next memoized read instead of pinning that
+    session forever."""
+    from python_dtl_spark import catalog as cat
+
+    sf_dir = "/root/testdata/sf0.001"
+    monkeypatch.setenv("SPARK_GRAFT_TABLE_MEMO", "1")
+    cat._clear_table_memo()
+    try:
+        cat._TABLE_MEMO[("app-gone", sf_dir, "region")] = object()
+        df = cat._read(spark, sf_dir, "region")
+        app = spark.sparkContext.applicationId
+        assert cat._TABLE_MEMO == {(app, sf_dir, "region"): df}
+    finally:
+        cat._clear_table_memo()
+
+
+def test_dtl_memo_seeding_skips_synthetic_keys(spark, monkeypatch):
+    """_dtl seeds its importer from the table memo with DTL table names
+    only: the catalog's synthetic keys (``events@...`` of _read_events)
+    never reach the importer's namespace, while imported tables are
+    captured back into the memo."""
+    from python_dtl_spark import catalog as cat
+
+    sf_dir = "/root/testdata/sf0.001"
+    monkeypatch.setenv("SPARK_GRAFT_TABLE_MEMO", "1")
+    cat._clear_table_memo()
+    importers = []
+
+    class Recording(cat.FileSystemImporter):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            importers.append(self)
+
+    monkeypatch.setattr(cat, "FileSystemImporter", Recording)
+    try:
+        cat._read_events(spark, sf_dir)
+        region = cat._read(spark, sf_dir, "region")
+        fn = cat._dtl(
+            "WITH region AS IMPORT 'region';\n"
+            "WITH output AS SELECT r_regionkey FROM region;\n"
+            "EXPORT output TO 'output';"
+        )
+        assert fn(spark, sf_dir).count() == 5
+        (importer,) = importers
+        assert importer._memo.get("region") is region
+        assert not any("@" in name for name in importer._memo)
+        assert any("@" in key[2] for key in cat._TABLE_MEMO)
+    finally:
+        cat._clear_table_memo()

@@ -828,6 +828,180 @@ def test_cosine_topk_refuses_oversized_broadcast_query_set(spark):
     assert out.count() == 2
 
 
+def _sql_fold_cosine_topk(corpus, queries, k, include_self):
+    """The exact tier as it was a SQL expression: a broadcast cross join
+    scoring every pair with the ``zip_with``/``aggregate`` fold.  Kept
+    here only as the reference the fold kernel must match bit for bit."""
+    from pyspark.sql import Window
+    from pyspark.sql.functions import broadcast
+
+    c = similarity._spread(corpus).select(
+        F.col("vec_id").alias("neighbor_id"),
+        similarity._to_double(F.col("embedding")).alias("__cv"),
+    ).withColumn("__cn", similarity._norm(F.col("__cv")))
+    q = queries.select(
+        F.col("query_id"), similarity._to_double(F.col("embedding")).alias("__qv")
+    ).withColumn("__qn", similarity._norm(F.col("__qv")))
+    joined = c.join(broadcast(q), how="cross")
+    if not include_self:
+        joined = joined.filter(F.col("neighbor_id") != F.col("query_id"))
+    scored = joined.withColumn(
+        "cosine",
+        similarity._dot(F.col("__cv"), F.col("__qv"))
+        / (F.col("__cn") * F.col("__qn")),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cosine")
+    )
+
+
+def _ranked_bits(df):
+    """(query_id, neighbor_id, rank) -> cosine bits as int64 (None for
+    NULL), so -0.0/0.0 and NaN payloads count as different values."""
+    import numpy as np
+
+    rows = df.collect()
+    bits = np.array(
+        [0.0 if r.cosine is None else r.cosine for r in rows], dtype=np.float64
+    ).view("i8")
+    return {
+        (r.query_id, r.neighbor_id, r.rank): None if r.cosine is None else int(b)
+        for r, b in zip(rows, bits)
+    }
+
+
+def _assert_kernel_matches_fold(corpus, queries, k, include_self):
+    want = _ranked_bits(_sql_fold_cosine_topk(corpus, queries, k, include_self))
+    got = _ranked_bits(
+        similarity.cosine_topk(corpus, queries, k=k, include_self=include_self)
+    )
+    assert got == want, (k, include_self)
+    return want
+
+
+def test_cosine_topk_kernel_bits_equal_sql_fold_on_embeddings(spark):
+    """Every pair of the sf0.001 embeddings (k = corpus size): same
+    (query, neighbor, rank) and the same cosine bits as the SQL fold."""
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    queries = emb.select(F.col("vec_id").alias("query_id"), "embedding")
+    n = emb.count()
+    want = _assert_kernel_matches_fold(emb, queries, n, include_self=False)
+    assert len(want) == n * (n - 1)
+
+
+# edge vectors: each line names what it exercises
+EDGE_CORPUS = [
+    (1, [1.0, 2.0, 0.0]),
+    (2, [1.0, 2.0, 0.0]),  # exact duplicate of 1: tied cosines
+    (3, None),  # NULL vector
+    (4, [1.0, None, 0.0]),  # NULL element
+    (5, [1.0, 2.0, 3.0, 4.0]),  # dimension mismatch with the rest
+    (6, [-1.0, 0.0, 0.0]),
+    (7, [0.0, 1.0, 0.0]),
+    (8, [10.0, 0.0, 1e-160]),  # with 9: the dot underflows to -0.0 cosine
+    (9, [0.0, 10.0, -1e-163]),
+    (10, [1e200, 1e200, 0.0]),  # overflowing norm: NaN cosines
+    (14, [1e200, 0.0, 1e200]),  # with 10: inf / inf
+    (11, [1.0, 0.0, 0.0]),  # +0.0 against 9, tied with 8's -0.0
+    (None, [1.0, 2.0, 0.0]),  # NULL id
+    (12, [0.5, 0.25, 0.125]),
+    (13, [3.0, 1.0, 2.0]),
+]
+
+
+def _edge_frames(spark, rows, id_type="long"):
+    corpus = spark.createDataFrame(
+        rows, f"vec_id {id_type}, embedding array<double>"
+    )
+    return corpus, corpus.select(F.col("vec_id").alias("query_id"), "embedding")
+
+
+@pytest.mark.parametrize("include_self", [True, False])
+def test_cosine_topk_kernel_bits_equal_sql_fold_on_edge_vectors(
+    spark, monkeypatch, include_self
+):
+    corpus, queries = _edge_frames(spark, EDGE_CORPUS)
+    got = _assert_kernel_matches_fold(corpus, queries, 50, include_self)
+    bits = set(got.values())
+    assert None in bits  # NULL cosines
+    assert 0 in bits and -(1 << 63) in bits  # +0.0 and -0.0
+    assert any(
+        b is not None and (b >> 52) & 0x7FF == 0x7FF and b & ((1 << 52) - 1)
+        for b in bits
+    )  # NaN
+    _assert_kernel_matches_fold(corpus, queries, 2, include_self)
+    # k larger than a chunk: one corpus row per kernel step
+    monkeypatch.setattr(similarity, "_KERNEL_CELLS", 1)
+    for k in (2, 50):
+        _assert_kernel_matches_fold(corpus, queries, k, include_self)
+    # string ids (the NULL id stays NULL)
+    s_rows = [(None if i is None else f"v{i:02d}", v) for i, v in EDGE_CORPUS]
+    s_corpus, s_queries = _edge_frames(spark, s_rows, "string")
+    _assert_kernel_matches_fold(s_corpus, s_queries, 3, include_self)
+    # an empty query set
+    empty = queries.filter(F.lit(False))
+    assert _assert_kernel_matches_fold(corpus, empty, 3, include_self) == {}
+
+
+def test_cosine_topk_kernel_zero_vector_follows_divide_semantics(spark):
+    """A zero vector makes the divisor 0: NULL cosine with ANSI off, a
+    DIVIDE_BY_ZERO failure with ANSI on — as the SQL fold does."""
+    rows = EDGE_CORPUS + [(15, [0.0, 0.0, 0.0])]
+    corpus, queries = _edge_frames(spark, rows)
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        for include_self in (True, False):
+            _assert_kernel_matches_fold(corpus, queries, 50, include_self)
+            _assert_kernel_matches_fold(corpus, queries, 2, include_self)
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        for fn in (_sql_fold_cosine_topk, similarity.cosine_topk):
+            with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+                fn(corpus, queries, k=2, include_self=False).collect()
+        # the zero vector alone against itself is an excluded self pair
+        lone = corpus.filter(F.col("vec_id") == 15)
+        lone_q = queries.filter(F.col("query_id") == 15)
+        _assert_kernel_matches_fold(lone, lone_q, 2, include_self=False)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
+def test_cosine_topk_rejects_mixed_id_types_when_excluding_self(spark):
+    corpus, _ = _edge_frames(spark, EDGE_CORPUS)
+    queries = corpus.select(
+        F.col("vec_id").cast("string").alias("query_id"), "embedding"
+    )
+    with pytest.raises(ValueError, match="types differ"):
+        similarity.cosine_topk(corpus, queries, k=2)
+    assert similarity.cosine_topk(corpus, queries, k=2, include_self=True).count()
+
+
+def test_knn_classify_exact_tier_bounds_its_query_collect(spark, monkeypatch):
+    """The exact tier collects at most MAX_BROADCAST_QUERIES + 1 query
+    rows and refuses past the bound; the num_vectors hint refuses before
+    any job runs."""
+    monkeypatch.setattr(similarity, "MAX_BROADCAST_QUERIES", 5)
+    df = spark.createDataFrame(
+        [(i, [float(i), 1.0], i % 2) for i in range(6)],
+        "vec_id long, embedding array<double>, label int",
+    )
+    with pytest.raises(ValueError, match="MAX_BROADCAST_QUERIES=5"):
+        similarity.knn_classify(df, k=2)
+    sc = spark.sparkContext
+    sc.setJobGroup("knn-guard", "no jobs expected")
+    try:
+        with pytest.raises(ValueError, match="MAX_BROADCAST_QUERIES=5"):
+            similarity.knn_classify(df, k=2, num_vectors=6)
+        jobs = sc.statusTracker().getJobIdsForGroup("knn-guard")
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(jobs) == []
+    assert similarity.knn_classify(df.filter("vec_id < 5"), k=2).count() == 5
+
+
 def test_lsh_topk_wrong_dim_fails_fast(spark):
     # zip_with would NULL-pad on a wrong dim, silently collapsing every
     # signature to bucket 0 — the plan-side guard must raise instead
@@ -2043,6 +2217,38 @@ def test_merge_crawl_into_index_equals_rebuild(spark, tmp_path):
     # schema contract: a non-index frame is rejected loudly
     with pytest.raises(ValueError, match="minhash_band_buckets"):
         dedup.merge_crawl_into_index(docs, crawl)
+
+
+def test_merge_crawl_into_index_rejects_out_of_range_bands(spark):
+    """crawl_buckets banded under another ``bands`` fail the merge in the
+    plan (raise_error), with no job at construction."""
+    index = spark.createDataFrame(
+        [(1, 0, 11), (1, 1, 12)], "doc_id long, band int, bucket long"
+    )
+    crawl = spark.createDataFrame([(2, "x")], "doc_id long, text string")
+    sc = spark.sparkContext
+    for band in (4, -1, None):
+        buckets = spark.createDataFrame(
+            [(2, 0, 21), (2, band, 22)], "doc_id long, band int, bucket long"
+        )
+        sc.setJobGroup("band-guard", "no jobs expected")
+        try:
+            merged = dedup.merge_crawl_into_index(
+                index, crawl, bands=4, crawl_buckets=buckets
+            )
+            jobs = sc.statusTracker().getJobIdsForGroup("band-guard")
+        finally:
+            sc.setJobGroup(None, None)
+        assert list(jobs) == []
+        with pytest.raises(Exception, match=r"crawl_buckets band outside \[0, 4\)"):
+            merged.collect()
+    ok = spark.createDataFrame(
+        [(2, 0, 21), (2, 3, 22)], "doc_id long, band int, bucket long"
+    )
+    merged = dedup.merge_crawl_into_index(index, crawl, bands=4, crawl_buckets=ok)
+    assert sorted(tuple(r) for r in merged.collect()) == [
+        (1, 0, 11), (1, 1, 12), (2, 0, 21), (2, 3, 22)
+    ]
 
 
 def test_crawl_delta_returned_buckets_equal_band_index(spark, tmp_path):

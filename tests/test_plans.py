@@ -773,6 +773,23 @@ def test_props_extract_stays_jvm_side_single_agg_exchange(spark):
     assert plan.count("Exchange") == 1, plan
 
 
+def test_knn_classify_exact_tier_is_a_fold_kernel_not_a_pair_join(spark):
+    """The exact kNN tier scores the corpus in cosine_topk's mapInArrow
+    fold kernel against a broadcast variable: no per-pair
+    zip_with/aggregate expression and no cartesian or nested-loop join
+    producing the pairs."""
+    from python_dtl_spark.operators import similarity
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    df = similarity.knn_classify(emb, k=5)
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "MapInArrow" in optimized, optimized
+    assert "zip_with(" not in optimized and "aggregate(" not in optimized
+    plan = _exec_plan(df)
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
 def test_knn_classify_lsh_tier_no_all_pairs_stage(spark):
     """The kNN scale tier builds candidates through the LSH bucket
     equi-join: no cartesian/nested-loop anywhere in the plan (the
