@@ -35,7 +35,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query; omitted for ops whose hashing
-    primitives are Spark-specific (xxhash64) or approximate (LSH) —
-    those get the driver's rows-only check."""
-    return {name: q.oracle for name, q in QUERIES.items() if q.oracle is not None}
+    """DuckDB-equivalent SQL per query (every catalog row has one)."""
+    return {name: q.oracle for name, q in QUERIES.items()}

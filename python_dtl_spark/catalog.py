@@ -14,13 +14,10 @@ name before hashing values.
 
 from __future__ import annotations
 
-import json
 import os
-import re
 from collections.abc import Callable
 from fractions import Fraction
 from dataclasses import dataclass
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -71,14 +68,14 @@ def _lineage_truncate(spark):
 class CatalogQuery:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # DuckDB SQL over pre-registered table views
+    oracle: str  # DuckDB SQL over pre-registered table views
     headline: bool = False  # include in bench.py
 
 
 QUERIES: dict[str, CatalogQuery] = {}
 
 
-def _register(name: str, fn, oracle: str | None, headline: bool = False) -> None:
+def _register(name: str, fn, oracle: str, headline: bool = False) -> None:
     QUERIES[name] = CatalogQuery(name=name, fn=fn, oracle=oracle, headline=headline)
 
 
@@ -683,9 +680,7 @@ _register(
     # against real data: prepended to encode(lang) and hex'd, so a
     # wrong byte value, a broken escape decode, or TEXT<->BYTES
     # coercion all change the hash.  Spark's hex(binary) and DuckDB's
-    # hex(BLOB) are both uppercase — byte-exact cross-engine.  The row
-    # is in the r18 window anyway (r14-stale), so the change round
-    # itself records the evidence (the freshness rule).
+    # hex(BLOB) are both uppercase — byte-exact cross-engine.
     "dtl_scalar_functions",
     _dtl(
         """
@@ -858,22 +853,51 @@ _register(
     "ORDER BY revenue DESC, c_custkey LIMIT 20",
 )
 
+_approx_distinct_dtl = _dtl(
+    """
+    WITH lineitem AS IMPORT 'lineitem';
+    WITH output AS
+        SELECT l_returnflag,
+               approx_count_distinct(l_partkey) AS approx_parts,
+               count_distinct(l_partkey) AS exact_parts
+        FROM lineitem
+        GROUP BY l_returnflag
+        ORDER BY l_returnflag;
+    EXPORT output TO 'output';
+    """
+)
+
+
+def _q_approx_distinct_parts(spark, sf_dir):
+    """HLL++ approx distinct per returnflag THROUGH THE DTL ENGINE
+    (§2.4 approx_count_distinct in the function registry).  The
+    engine-private HLL++ estimate cannot be hashed, so the exact leg
+    hashes directly and the estimate ships as the
+    ``_sketch_within_tolerance`` flag (|est−exact| ≤ 15%·exact+2 — 3σ
+    of the default rsd=0.05; measured error on these columns ≤ 2.7% at
+    sf0.001/0.01/0.1, a >5× margin).  A broken sketch flips the flag
+    and reddens the row; ``test_approx_distinct_tolerance_flag_is_not_
+    vacuous`` pins that the flag actually can flip."""
+    out = _approx_distinct_dtl(spark, sf_dir)
+    return out.select(
+        "l_returnflag",
+        "exact_parts",
+        _sketch_within_tolerance(
+            F.col("approx_parts"), F.col("exact_parts")
+        ).alias("approx_ok"),
+    )
+
+
 _register(
     "dtl_approx_distinct_parts",
-    _dtl(
-        """
-        WITH lineitem AS IMPORT 'lineitem';
-        WITH output AS
-            SELECT l_returnflag,
-                   approx_count_distinct(l_partkey) AS approx_parts,
-                   count_distinct(l_partkey) AS exact_parts
-            FROM lineitem
-            GROUP BY l_returnflag
-            ORDER BY l_returnflag;
-        EXPORT output TO 'output';
-        """
-    ),
-    None,  # HLL++ sketch values are engine-specific — rows-only check
+    _q_approx_distinct_parts,
+    """
+    SELECT l_returnflag,
+           CAST(count(DISTINCT l_partkey) AS BIGINT) AS exact_parts,
+           TRUE AS approx_ok
+    FROM lineitem
+    GROUP BY l_returnflag
+    """,
 )
 
 
@@ -7971,9 +7995,10 @@ def _q_value_histogram(spark, sf_dir):
     return stats.equi_depth_histogram(ev, "value", n_buckets=10)
 
 
-_register(
-    "events_value_histogram",
-    _q_value_histogram,
+# DuckDB replay of the exact 10-bucket equi-depth assignment: ``t``
+# holds (value, bucket) for every non-NULL event value.  Shared by the
+# exact row and its sketch twin.
+_VALUE_BUCKETS_CTE = (
     """
     WITH ranked AS (
         SELECT value, cume_dist() OVER (ORDER BY value) AS cd FROM events
@@ -7995,6 +8020,14 @@ _register(
         FROM events CROSS JOIN b
         WHERE value IS NOT NULL
     )
+    """
+)
+
+_register(
+    "events_value_histogram",
+    _q_value_histogram,
+    _VALUE_BUCKETS_CTE
+    + """
     SELECT bucket, CAST(count(*) AS BIGINT) AS n,
            min(value) AS lo, max(value) AS hi
     FROM t GROUP BY bucket
@@ -8003,35 +8036,128 @@ _register(
 )
 
 
+def _hist_n_within_tolerance(n_sk, n_exact, n_total):
+    """|n_sk − n_exact| ≤ max(2, 1%·n_total/10), FALSE when the sketch
+    bucket is missing (NULL n_sk).  The bound is RANK error:
+    approx_percentile's default accuracy gives ~1e-4 relative rank per
+    edge, but when sketch and exact edges land on DIFFERENT tie-run
+    values the count shifts by the tie mass — measured max deviation is
+    0 / 2 / 13 at sf0.001 / 0.01 / 0.1 (0.13% of bucket size at sf0.1,
+    a ~7× margin).  Factored out so
+    ``test_histogram_sketch_tolerance_flag_is_not_vacuous`` can pin
+    that the flag flips on a drained or vanished bucket."""
+    tol = F.greatest(F.lit(2.0), 0.01 * n_total / F.lit(10))
+    return F.coalesce(F.abs(n_sk - n_exact) <= tol, F.lit(False))
+
+
 def _q_value_histogram_sketch(spark, sf_dir):
     """The 100 TB tier of the same histogram: t-digest
     ``approx_percentile`` edges (constant memory per executor, sketch
     merge instead of a per-group column sort).  The sketch is
-    engine-private, so — like the HLL++ query — this registers
-    rows-only; the exact twin above carries the full value oracle, and
-    unit tests pin the sum-of-counts == non-null-rows invariant."""
+    engine-private, so the row joins the exact twin on bucket, hashes
+    (bucket, n_exact) directly and ships the sketch leg as the
+    ``_hist_n_within_tolerance`` count-deviation flag.  Row set = the
+    exact twin's buckets (DuckDB-replayable); a sketch bucket that
+    disappears or absorbs rows flips ``n_ok`` on the buckets it
+    drained."""
     ev = _read_events(spark, sf_dir).select("value")
-    return stats.equi_depth_histogram(ev, "value", n_buckets=10, exact=False)
+    sk = stats.equi_depth_histogram(ev, "value", n_buckets=10, exact=False)
+    ex = stats.equi_depth_histogram(ev, "value", n_buckets=10)
+    n_total = F.broadcast(
+        ev.filter(F.col("value").isNotNull()).agg(
+            F.count(F.lit(1)).alias("__n_total")
+        )
+    )
+    return (
+        ex.select("bucket", F.col("n").alias("n_exact"))
+        .join(sk.select("bucket", F.col("n").alias("__n_sk")), "bucket", "left")
+        .join(n_total)
+        .select(
+            "bucket",
+            "n_exact",
+            _hist_n_within_tolerance(
+                F.col("__n_sk"), F.col("n_exact"), F.col("__n_total")
+            ).alias("n_ok"),
+        )
+    )
 
 
-_register("events_value_histogram_sketch", _q_value_histogram_sketch, None)
+_register(
+    "events_value_histogram_sketch",
+    _q_value_histogram_sketch,
+    _VALUE_BUCKETS_CTE
+    + """
+    SELECT bucket, CAST(count(*) AS BIGINT) AS n_exact, TRUE AS n_ok
+    FROM t GROUP BY bucket
+    """,
+)
+
+
+def _winsorize_within_band(v, w, lo_lo, lo_hi, hi_lo, hi_hi):
+    """The per-row clip-decision check against exact percentiles
+    widened by a rank band: rows below the low band MUST clip into it,
+    rows inside the certain middle MUST pass through, rows above the
+    high band MUST clip into it, band rows are free, NULL stays NULL —
+    factored out so ``test_winsorize_sketch_tolerance_flag_is_not_
+    vacuous`` can pin that every MUST leg actually flips on a broken
+    sketch."""
+    return (
+        F.when(v.isNull(), w.isNull())
+        .when(v < lo_lo, w.between(lo_lo, lo_hi))
+        .when(v > hi_hi, w.between(hi_lo, hi_hi))
+        .when(v.between(lo_hi, hi_lo), w == v)
+        .otherwise(F.lit(True))
+    )
 
 
 def _q_winsorize_sketch(spark, sf_dir):
     """Sketch-tier winsorization: approx_percentile bounds.  Output is
     still values-moved-not-computed, but which rows clip depends on the
-    sketch's rank error — rows-only, with the exact twin oracle-checked
-    above."""
+    sketch's rank error.  Rows FAR from the percentile boundary must
+    behave identically under any in-tolerance sketch, so each row's
+    clip decision is checked by ``_winsorize_within_band`` against
+    EXACT percentiles widened by ±0.002 rank (20× approx_percentile's
+    default ~1e-4 rank error): (event_id, value) hash directly and
+    ``w_ok`` is TRUE for every row under a correct sketch."""
     ev = _read_events(spark, sf_dir).select("event_id", "value")
-    return stats.winsorize(ev, "value", lower=0.01, upper=0.99, exact=False)
+    out = stats.winsorize(ev, "value", lower=0.01, upper=0.99, exact=False)
+    delta = 0.002
+    band = F.broadcast(
+        ev.agg(
+            *[
+                F.expr(
+                    f"percentile_disc({q!r}) WITHIN GROUP (ORDER BY value)"
+                ).alias(a)
+                for q, a in [
+                    (0.01 - delta, "__lo_lo"),
+                    (0.01 + delta, "__lo_hi"),
+                    (0.99 - delta, "__hi_lo"),
+                    (0.99 + delta, "__hi_hi"),
+                ]
+            ]
+        )
+    )
+    ok = _winsorize_within_band(
+        F.col("value"),
+        F.col("value_winsorized"),
+        F.col("__lo_lo"),
+        F.col("__lo_hi"),
+        F.col("__hi_lo"),
+        F.col("__hi_hi"),
+    )
+    return out.join(band).select("event_id", "value", ok.alias("w_ok"))
 
 
-_register("events_winsorized_sketch", _q_winsorize_sketch, None)
+_register(
+    "events_winsorized_sketch",
+    _q_winsorize_sketch,
+    "SELECT event_id, value, TRUE AS w_ok FROM events",
+)
 
 
 def _sketch_within_tolerance(est, exact):
     """|est − exact| ≤ 15 %·exact + 2 — the sketch-verification
-    predicate of the graduated rows-only rows (3 σ of HLL++'s default
+    predicate of the HLL++ rows (3 σ of HLL++'s default
     rsd = 0.05 plus small-cardinality slack; HLL++ is EXACT below its
     sparse-mode threshold, so tiny columns must pass by equality).
     Factored out so ``test_sketch_tolerance_flag_is_not_vacuous`` can
@@ -11074,407 +11200,3 @@ _register(
     GROUP BY source
     """,
 )
-
-
-# ---------------------------------------------------------------------------
-# Driver-window ordering
-# ---------------------------------------------------------------------------
-# The driver's correctness gate checks only the FIRST 50 entries of
-# ``queries()`` (dict insertion order).  Registration order above follows
-# the SURVEY.md §2 inventory, which is the wrong priority for evidence —
-# in rounds 1-2 it left the whole LLM-pipeline stack unverified.  Rounds
-# 2-3 managed the window with a hand-edited rotation list; this derives
-# it from the accumulated driver evidence instead, so the rotation can
-# never drift from reality again.
-#
-# Evidence source: ``CORRECTNESS_r{N}.json`` files the driver writes at
-# the repo root each round.  Per query we track the most recent round it
-# was checked at all and the most recent round it hash-passed.  Export
-# order is ascending staleness:
-#
-#   1. never-verified queries first (new this round, or never in-window);
-#   2. then by oldest most-recent-verification — "verification" meaning
-#      hash-pass for oracle-backed queries, any driver row for the
-#      oracle-less ones (rows-only is their evidence ceiling);
-#   3. registration order (SURVEY §2 order) breaks ties.
-#
-# A query that regressed (checked recently but last hash-pass older)
-# sorts by its last PASS, pulling it back into the window until green.
-
-_CORRECTNESS_GLOB = "CORRECTNESS_r*.json"
-
-
-def _correctness_history() -> dict[str, tuple[int, int]]:
-    """Read every driver CORRECTNESS_r{N}.json at the repo root.
-
-    Returns ``{query_name: (last_checked_round, last_hash_pass_round)}``
-    with 0 meaning "never".  Malformed or unreadable files are skipped —
-    ordering degrades gracefully to registration order on a fresh
-    checkout with no driver history.
-    """
-    root = Path(__file__).resolve().parent.parent
-    hist: dict[str, tuple[int, int]] = {}
-    for path in root.glob(_CORRECTNESS_GLOB):
-        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            rows = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            checked, passed = hist.get(name, (0, 0))
-            checked = max(checked, rnd)
-            if isinstance(row, dict) and row.get("hash_match") is True:
-                passed = max(passed, rnd)
-            hist[name] = (checked, passed)
-    return hist
-
-
-# Queries whose implementation changed materially, keyed by the round
-# the change landed: forced to the front of the window (alongside
-# never-verified entries) until a driver row from the change round or
-# later goes green, at which point the override expires automatically —
-# no manual pruning.  In this driver pipeline the correctness run always
-# postdates the builder's commits, so a green row recorded in the change
-# round itself IS valid evidence for the changed implementation; the
-# strict ``passed < round`` comparison in :func:`freshness` encodes
-# exactly that (round-7 verdict: both the window harness and its tests
-# must share one expiry rule — this function is that rule).
-# Current entries are the round-8 changes: both LSH pair generators
-# restructured to carry only (id, bucket) through the probe shuffle and
-# rejoin vectors at the exact-cosine verify; SemDedup's n_centroids now
-# auto-sizes from the corpus count; OHLC bucketing switched to exact
-# long arithmetic; weighted_sample rejects NaN weights; the temperature
-# and histogram oracles gained NULL filters mirroring the engine.
-_CHANGED_IN_ROUND: dict[str, int] = {
-    "dedup_embedding_cosine": 8,
-    "embed_similarity_join": 8,
-    "dedup_semdedup": 8,
-    "events_ohlc": 8,
-    "events_funnel": 8,
-    "doc_weighted_sample": 8,
-    "doc_temperature_mix": 8,
-    "events_value_histogram": 8,
-    "events_winsorized": 8,
-    # round-8 review-fix wave: exact mean_word_len (quality CTE),
-    # coalesced gopher rules, short-doc rows in census/dominance,
-    # post-email phone counts, NaN-masked zscore stats, null-safe CDC
-    # merge with literal-__op support
-    "doc_quality_score": 8,
-    "doc_gopher_quality": 8,
-    "doc_dup_windows": 8,
-    "doc_ngram_dominance": 8,
-    "doc_pii_scrub": 8,
-    # events_zscore_outliers: changed in r8 (NaN-masked zscore stats)
-    # and again in r10 — single entry below in the round-10 block
-    # (advisor r11: one entry per query; last-wins duplicates are dead
-    # code that silently reverts if the later block is reordered).
-    "orders_apply_changes": 8,
-    "pipeline_clean_corpus": 8,
-    "pipeline_dedup_corpus": 8,
-    "pipeline_curate_corpus": 8,
-    # round-8 second review wave: exact resample bucket index +
-    # null-safe group join-back, asof NULL-ts right filter, hash_split
-    # NULL-split + rounded thresholds, finite-weight filter, multiprobe
-    # implemented, lsh/ivf broadcast hint removed, int8 arrays
-    "events_resample_ffill": 8,
-    "events_asof_join": 8,
-    "events_range_join_sessions": 8,
-    "doc_hash_split": 8,
-    "doc_stratified_sample": 8,
-    "similarity_topk_lsh": 8,
-    "similarity_topk_ivf": 8,
-    "similarity_topk_quantized": 8,
-    # round-8 third review wave (dedup/streaming): convergence raise,
-    # empty-doc retention in simhash/shingles, duplicate-id dedupe in
-    # minhash/jaccard, consolidated dot/norm fold
-    "dedup_minhash_lsh": 8,
-    "dedup_ngram_jaccard": 8,
-    "dedup_simhash": 8,
-    "dedup_lsh_keep": 8,
-    "events_interval_join": 8,
-    # round-8 fourth review wave (engine core): LIMIT-after-DISTINCT in
-    # the aggregate path, ordered-mode LIMIT by hidden order, round()
-    # double cast, float-normalized + by-construction trace bridges
-    "dtl_distinct": 8,
-    "dtl_order_limit": 8,
-    "dtl_union": 8,
-    "dtl_intersect": 8,
-    "dtl_except": 8,
-    # dtl_scalar_functions: r8 (round() double cast) then r18 (bytes-
-    # literal leg added to the script + oracle) — single last-wins
-    # entry per the advisor-r11 rule; the row was r14-stale and thus
-    # in the r18 window regardless, so the force costs no extra slot
-    "dtl_scalar_functions": 18,
-    "trace_provenance": 8,
-    # NOT listed despite round-8 oracle edits (deliberate):
-    # events_value_percentiles, decontaminate_train_test,
-    # decontaminate_prefiltered and doc_domain_quota gained NULL-guard
-    # clauses in their ORACLE SQL only — branches provably never taken
-    # on the NULL-free driver fixtures (WHERE k IS NOT NULL removes
-    # nothing; the added CASE arm requires a NULL key), so the
-    # verification pair is value-identical and their existing green
-    # rows remain valid evidence.  Forcing them would overflow the
-    # 50-slot window and push genuinely-changed engine code out of
-    # round-8 re-verification.  All four re-verified locally (sf0.01
-    # full-catalog run) after the edit.  (Round 9: now that the window
-    # has headroom they ARE forced — see the round-9 block below — so
-    # the committed evidence covers the edited oracle text.)
-    # round-8 fifth review wave: SQL-AVG rollup denominators, NULL-user
-    # retention exclusion, dotted-name-safe funnel/rollup internals
-    "events_time_rollup": 8,
-    "events_retention": 8,
-    # Round-9 evidence-trail closure (advisor r8 finding #1): the four
-    # queries whose ORACLE SQL gained NULL-guard clauses in round 8 were
-    # excluded from the r8 window on a "provably no-op on NULL-free
-    # fixtures" argument; the local re-verification backing that claim
-    # was never committed.  Force them through the driver window once so
-    # CORRECTNESS_r09.json carries green rows that postdate the edited
-    # oracle text.
-    "events_value_percentiles": 9,
-    "decontaminate_train_test": 9,
-    "decontaminate_prefiltered": 9,
-    "doc_domain_quota": 9,
-    # round-9 changes: mad_outliers grew the persist valve and its
-    # oracle's join-backs went null-safe (IS NOT DISTINCT FROM); the
-    # exact-tier kNN catalog query now passes the num_vectors broadcast
-    # guard hint; shuffle_shards rejects output-column collisions
-    "events_mad_outliers": 9,
-    "embed_knn_classify": 9,
-    "doc_shuffle_shards": 9,
-    # round-10 changes: dedup_paragraphs' first-occurrence choice went
-    # from a per-fingerprint row_number window (hot-key funnel — the r9
-    # verdict's one skew demerit) to a map-side-combinable min(struct)
-    # aggregation; the z-score oracle's join-back went null-safe
-    # (IS NOT DISTINCT FROM), propagating the mad_outliers precedent;
-    # canonicalize_urls switched from string-built F.expr to the native
-    # F.try_parse_url API (dotted-name safety, advisor r9 #1) and its
-    # registrable domain gained the PSL-exact broadcast tier.
-    # (doc_dedup_paragraphs also changed in r10 — min-struct rewrite —
-    # then again in r11; its single entry lives in the round-11 block.)
-    "events_zscore_outliers": 10,  # also r8: NaN-masked zscore stats
-    "doc_url_canonicalize": 10,
-    # round-11 changes: dedup_paragraphs grew the with_lineage mapping
-    # output — the result path is a pure factoring (kept = first.select
-    # over the same min-struct aggregate) but the function changed, so
-    # its row re-verifies; apply_merge gained only the n_merges
-    # collision guard (raises on inputs the fixtures never have) and
-    # load_psl_snapshot the whitespace cut (the checked-in snapshot has
-    # no whitespace lines — verified by grep), so doc_apply_merge /
-    # doc_bpe_round / doc_url_psl_domains keep their r10 evidence.
-    # exact_dedup_canonical likewise grew with_lineage (result path
-    # unchanged: same groupBy/min expression, early-returned), but the
-    # function changed, so dedup_exact re-verifies too.
-    # NOT forced: vocabulary gained a tokens_col param (default None)
-    # whose None path builds the IDENTICAL expression as before — the
-    # apply_merge-guard class of change; doc_vocabulary re-checked
-    # locally at sf0.01 after the edit (green) and keeps its r10 row.
-    "doc_dedup_paragraphs": 11,
-    "dedup_exact": 11,
-    # round-12 changes: keep_one_from_pairs and lsh_dedup_keep grew the
-    # with_lineage mapping output (default-off; the result path is the
-    # same converged-label projection, early-returned) — following the
-    # r11 dedup_exact precedent, every row whose function changed
-    # re-verifies, costing 2 window slots beyond the r9 backlog
-    # (dedup_embedding_keep was r9-stale and re-verifies regardless);
-    # the displaced r9 rows are named in COVERAGE.md.
-    "dedup_lsh_keep": 12,
-    "pipeline_dedup_corpus": 12,
-    "dedup_embedding_keep": 12,
-    # round-13 NOT-forced notes (advisor r12 fixes + the measured BPE
-    # tier default): (1) bpe_encode's max_literal_entries default
-    # dropped 65_536 -> 128 on the SCALING.md crossover measurement —
-    # this re-routes only tables with >128 entries to the broadcast
-    # tier, and every catalog row's table has <= 8 entries, so every
-    # row executes the byte-identical fold plan (all four bpe rows
-    # re-checked locally at sf0.01 after the change: green); the two
-    # tiers are additionally property-tested and probe-hash-asserted
-    # equal.  (2) _bpe_encode_broadcast now tokenizes JVM-side —
-    # broadcast-tier-only code no catalog row reaches.  (3) the
-    # internal-column collision guards added to lm_perplexity /
-    # nb_apply / epoch_upsample / target_mix_resample raise only on
-    # inputs already carrying __-prefixed working columns, which no
-    # fixture has (the apply_merge-guard precedent); the NB/mix rows
-    # were re-checked locally at sf0.001 after the edit (green), and
-    # the LM/epoch rows are NEW this round so their r13 evidence
-    # covers the final code.
-    # round-15 changes: (1) the dated sample-valve refactor — nb_fit /
-    # lm_fit / bpe_fit / dsir_fit now delegate their sample_fraction
-    # block to sampling.hash_sample (pure factoring, pinned by the
-    # byte-identity contract test AND test_fit_sample_valve_refactor_
-    # is_pure, but per the r11 dedup_exact precedent every row whose
-    # function changed re-verifies); (2) top_fraction gained the
-    # advisor-r14 fixes (prefilter_quantile_error validation,
-    # exception-safe persist, quoting-safe quantile via the aliased
-    # projection) plus the floor_only mode — the dsir selection rows
-    # re-verify for both reasons; (3) token_budget_mix gained the
-    # size_col existence check and the quality-ordered order_col mode
-    # (default None = the identical md5 plan, but the function
-    # changed).
-    "doc_nb_classify": 15,
-    "pipeline_nb_curate": 15,
-    "doc_lm_score": 15,
-    "pipeline_lm_curate": 15,
-    "pipeline_bpe_tokenize": 15,
-    "doc_dsir_weights": 15,
-    "pipeline_dsir_select": 15,
-    "pipeline_dsir_resample": 15,
-    "pipeline_dsir_emit": 15,
-    "doc_token_budget_mix": 15,
-    # round-12 NOT-forced notes: domain_quota's column references
-    # switched from F.col(name) to quoted df[`name`] refs (dotted-name
-    # safety, matching target_mix_resample) — analysis-identical for
-    # the plain names every catalog row uses, so pipeline_domain_cap
-    # keeps its r10 evidence (re-checked locally at sf0.01 after the
-    # edit: green) and doc_domain_quota re-verifies in the r12 window
-    # anyway (r9-stale).  target_mix_resample gained precap_quota
-    # (default None = the exact pre-registration path) and nb_apply's
-    # pivot-column rename is output-neutral; both operators' rows are
-    # NEW this round, so their r12 evidence covers the final code.
-    #
-    # round-16 NOT-forced notes (the r15 advisor fixes, all
-    # error-path-only): soft_dedup_weights gained __sd_c{i} alias
-    # guards (raise on adversarial inputs; every catalog input lacks
-    # those columns), remove_duplicated_spans now rejects orphan
-    # against_* args (no catalog row passes them without against),
-    # and top_fraction's floor_only/prefilter incompatibility check
-    # moved BEFORE the persist (same ValueError, no longer pays a
-    # cache materialization first — valid-argument paths untouched).
-    # Outputs are bit-identical for every registered row; the three
-    # hosts' rows (doc_softdedup_weights, doc_decontaminate_spans,
-    # doc_dedup_spans, pipeline_floor_select families) also re-ran
-    # green in the full sf0.001 sweeps on the edited tree this round.
-    #
-    # round-16 forced entry: simhash_near_pairs' pigeonhole candidate
-    # generation was extracted into the shared hamming_near_pairs core
-    # (the image-dedup staging refactor).  The blocked-join algebra is
-    # unchanged and dedup_simhash re-checked green at sf0.01 locally
-    # after the edit, but the row was NOT otherwise due this round
-    # (r14-fresh) and engine code under it changed — so it re-verifies
-    # in the r16 window rather than riding a "provably identical"
-    # argument (the r8/r9 lesson).
-    "dedup_simhash": 16,
-    # round-17 forced entry: keep_newest_canonical's election struct
-    # gained fixed internal field names (__kn_t/__kn_k) + backtick-
-    # quoted refs and the key_col==time_col guard (r16 advisor item).
-    # Output values are identical for every registered row and
-    # pipeline_recrawl_refresh re-checked green at sf0.01 locally
-    # after the edit, but engine code under an r16-fresh row changed —
-    # so it re-verifies in the r17 window rather than riding a
-    # "provably identical" argument (the r8/r9 lesson, same as
-    # dedup_simhash above).
-    "pipeline_recrawl_refresh": 17,
-}
-
-
-def freshness(name: str, hist: dict[str, tuple[int, int]] | None = None) -> int:
-    """Round number of the newest evidence that ``name`` is correct.
-
-    0 means "must be re-verified": either never hash-passed, or its
-    implementation changed in a round strictly later than its newest
-    green row.  Shared by :func:`_apply_driver_order` and
-    ``tests/test_catalog.py`` so the window harness and its invariants
-    can never disagree on when a forced-re-verify override expires.
-    """
-    if hist is None:
-        hist = _correctness_history()
-    checked, passed = hist.get(name, (0, 0))
-    if passed < _CHANGED_IN_ROUND.get(name, 0):
-        return 0  # forced re-verification after an implementation change
-    return passed if QUERIES[name].oracle is not None else checked
-
-
-# Sort-key sentinel: larger than any real round number, so rows keyed
-# with it land after every oracle-backed entry whatever its freshness.
-_ALWAYS_FRESH = 10**9
-
-# Rows-only freshness cadence (round-12 verdict item 4): a query with
-# ``oracle=None`` records only "ran, produced N rows" when the driver
-# window reaches it — zero hash evidence — so pinning all of them past
-# every oracle-backed entry was the round-8 fix for 3 wasted slots.
-# But never rotating them at all left the 4 sketch twins driver-
-# unchecked since r6/r8.  Policy: a rows-only query becomes DUE once
-# its last driver check is >= _ROWS_ONLY_CADENCE rounds old, and at
-# most _ROWS_ONLY_PER_ROUND due queries (stalest first, name
-# tie-break) enter the window per round — a bounded 1-slot tax that
-# guarantees no query ever goes more than ~cadence+backlog rounds
-# without driver-committed "still runs" evidence.
-# r17: tightened 5 → 4 per the r16 verdict's cadence reading (item 4:
-# "dtl_approx_distinct_parts was last driver-checked r13 — it becomes
-# the due sketch-twin pick for r17's window"): evidence from round N
-# now covers rounds N..N+3 and the query rotates back in round N+4,
-# which also pulls the r14 sketch twins forward a round — strictly
-# tighter than the documented ≤7-round bound either way.
-_ROWS_ONLY_CADENCE = 4
-# r14: bumped 1 → 2 to clear the rows-only tail a round early — after
-# the r13 cadence start, events_winsorized_sketch and
-# orders_table_profile_sketch were still r8-stale (6 rounds); at one
-# per round the last would reach r16.  Two picks in r14 + one in r15
-# bounds every rows-only query at ≤7 rounds unchecked and then the
-# steady-state cadence holds everything under ~6.
-_ROWS_ONLY_PER_ROUND = 2
-
-
-def rows_only_due(hist: dict[str, tuple[int, int]] | None = None) -> set[str]:
-    """The ``oracle=None`` queries that rotate into this round's window.
-
-    Current round = newest round any query was driver-checked + 1 (the
-    driver checks 50 rows every round, so the max is the latest file).
-    On a fresh checkout (no history) nothing is due.  Tie-break is by
-    NAME, not registration position — :func:`_apply_driver_order`
-    reorders ``QUERIES``, and the due set must not depend on whether
-    it is computed before or after that reorder.
-    """
-    if hist is None:
-        hist = _correctness_history()
-    cur = max((checked for checked, _ in hist.values()), default=0) + 1
-    due = sorted(
-        (
-            n
-            for n, q in QUERIES.items()
-            if q.oracle is None
-            and cur - hist.get(n, (0, 0))[0] >= _ROWS_ONLY_CADENCE
-        ),
-        key=lambda n: (hist.get(n, (0, 0))[0], n),
-    )
-    return set(due[:_ROWS_ONLY_PER_ROUND])
-
-
-def sort_freshness(name: str, hist: dict[str, tuple[int, int]] | None = None) -> int:
-    """Primary driver-window sort key.
-
-    :func:`freshness` for oracle-backed queries; ``_ALWAYS_FRESH`` for
-    ``oracle=None`` rows EXCEPT the :func:`rows_only_due` cadence
-    picks (see above), which sort by their last-checked round so they
-    land between never-verified and the stale oracle backlog.  Shared
-    with ``tests/test_catalog.py`` for the same never-disagree reason
-    as :func:`freshness`.
-    """
-    if hist is None:
-        hist = _correctness_history()
-    if QUERIES[name].oracle is None:
-        if name in rows_only_due(hist):
-            return hist.get(name, (0, 0))[0]
-        return _ALWAYS_FRESH
-    return freshness(name, hist)
-
-
-def _apply_driver_order() -> None:
-    global QUERIES
-    hist = _correctness_history()
-    reg_pos = {n: i for i, n in enumerate(QUERIES)}
-
-    def staleness(name: str) -> tuple[int, int, int]:
-        checked, _ = hist.get(name, (0, 0))
-        # Secondary ``checked``: among never-hash-passed oracle-backed
-        # queries, brand-new ones outrank ones with rows-only history.
-        return (sort_freshness(name, hist), checked, reg_pos[name])
-
-    QUERIES = {n: QUERIES[n] for n in sorted(QUERIES, key=staleness)}
-
-
-_apply_driver_order()

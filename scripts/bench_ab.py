@@ -1,19 +1,17 @@
-"""Same-boot bench A/B: previous-round tip vs the current tree.
+"""Same-boot bench A/B: a committed ref vs the current tree.
 
-The driver's ``BENCH_r{N}.json`` files are captured in different boots
-and are NOT comparable across rounds (machine drift of 1.4× between
-captures fabricated a phantom regression in r16 that cost the judge a
-re-measurement).  This script is the committed fix (r16 verdict item
-3): run the previous round's tip and the current tree back-to-back in
-ONE boot, on the same headline set, and write
-``BENCH_sameboot_r{N}.json`` with per-query medians and the common-set
-ratio — the number the judge can trust without re-running anything.
+Bench records captured in different boots are NOT comparable (machine
+drift of 1.4× between captures once fabricated a phantom regression).
+This script runs a committed ref and the current tree back-to-back in
+ONE boot, on the same headline set, and writes
+``BENCH_sameboot_<sha>.json`` (``<sha>`` = the compared ref's short
+sha) with per-query medians and the common-set ratio.
 
     python scripts/bench_ab.py [prev_ref]
 
-``prev_ref`` defaults to the newest ``round N:`` commit (the driver's
-round-closing record commit).  The previous tip runs from a temporary
-git worktree; the current tree runs from the repo root.  Each side is
+``prev_ref`` defaults to ``HEAD``, so a run with no arguments measures
+the uncommitted change.  The ref runs from a temporary git worktree;
+the current tree runs from the repo root.  Each side is
 a fresh ``bench.py`` subprocess (own JVM), sequential on an otherwise
 idle box — "one boot" here means one machine session, minutes apart,
 which is what kills the cross-boot drift term.
@@ -23,7 +21,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import statistics
 import subprocess
 import sys
@@ -35,24 +32,6 @@ def _sh(args: list[str], **kw) -> str:
     return subprocess.run(
         args, check=True, capture_output=True, text=True, **kw
     ).stdout
-
-
-def _default_prev_ref() -> str:
-    log = _sh(["git", "-C", ROOT, "log", "--oneline", "-200"])
-    for line in log.splitlines():
-        sha, _, msg = line.partition(" ")
-        if re.match(r"round \d+:", msg):
-            return sha
-    raise SystemExit("no 'round N:' commit found; pass prev_ref explicitly")
-
-
-def _current_round() -> int:
-    rounds = [
-        int(m.group(1))
-        for f in os.listdir(ROOT)
-        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f))
-    ]
-    return (max(rounds) if rounds else 0) + 1
 
 
 def _run_bench(root: str) -> dict:
@@ -75,12 +54,12 @@ def _run_bench(root: str) -> dict:
 
 
 def main() -> None:
-    prev_ref = sys.argv[1] if len(sys.argv) > 1 else _default_prev_ref()
-    rnd = _current_round()
-    wt = f"/tmp/bench_ab_prev_{prev_ref[:8]}"
-    _sh(["git", "-C", ROOT, "worktree", "add", "--force", wt, prev_ref])
+    prev_ref = sys.argv[1] if len(sys.argv) > 1 else "HEAD"
+    sha = _sh(["git", "-C", ROOT, "rev-parse", "--short", prev_ref]).strip()
+    wt = f"/tmp/bench_ab_prev_{sha}"
+    _sh(["git", "-C", ROOT, "worktree", "add", "--force", wt, sha])
     try:
-        print(f"# previous tip {prev_ref} -> {wt}", file=sys.stderr)
+        print(f"# {prev_ref} ({sha}) -> {wt}", file=sys.stderr)
         prev = _run_bench(wt)
         print("# current tree", file=sys.stderr)
         cur = _run_bench(ROOT)
@@ -104,8 +83,8 @@ def main() -> None:
     }
     ratios = [v["ratio"] for v in per_query.values() if v["ratio"]]
     record = {
-        "round": rnd,
         "prev_ref": prev_ref,
+        "prev_sha": sha,
         "boot": "single-session back-to-back (prev first)",
         "sf": cur.get("sf"),
         "common_queries": len(common),
@@ -126,7 +105,7 @@ def main() -> None:
         ),
         "queries": per_query,
     }
-    path = os.path.join(ROOT, f"BENCH_sameboot_r{rnd}.json")
+    path = os.path.join(ROOT, f"BENCH_sameboot_{sha}.json")
     with open(path, "w") as f:
         json.dump(record, f, indent=1, sort_keys=True)
         f.write("\n")

@@ -1,9 +1,10 @@
-"""Dump .explain("formatted") for named catalog queries into plans/r21/.
+"""Dump .explain("formatted") for named catalog queries into a directory.
 
-    python scripts/dump_plans_r21.py <suffix> [query ...]
+    python scripts/dump_plans.py <out_dir> <suffix> [query ...]
 
-suffix is "before" or "after"; with no query names, dumps every
-headline query.
+Writes ``<out_dir>/<query>_<suffix>.txt`` (suffix is e.g. "before" or
+"after"); with no query names, dumps every headline query.  The data
+directory is ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.01 tables of TESTDATA.md).
 """
 from __future__ import annotations
 
@@ -20,12 +21,11 @@ from python_dtl_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:] or [n for n, q in QUERIES.items() if q.headline]
+    out_dir, suffix = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or [n for n, q in QUERIES.items() if q.headline]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    out_dir = os.environ.get("SPARK_GRAFT_PLANS_DIR") or os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r21")
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("plan-dump-r21")
+    spark = get_spark("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         q = QUERIES[name]

@@ -1,124 +1,25 @@
-"""Invariants of the driver-facing catalog contract.
-
-The driver checks exactly the first 50 entries of ``queries()`` — these
-tests keep the history-derived ordering machinery honest without running
-any query.
+"""The catalog contract: every registered query runs on Spark and
+matches its DuckDB oracle at sf0.001 (``test_query_matches_oracle``,
+one case per row, through ``scripts/check_oracle``'s comparator), plus
+the invariants of the planted fixtures, the sketch tolerance flags and
+the table-handle memo that those oracles rely on.
 """
 
 from __future__ import annotations
 
-import json
-from pathlib import Path
-
 import pytest
 
-from python_dtl_spark.catalog import (
-    QUERIES,
-    _correctness_history,
-    freshness,
-    sort_freshness,
-)
+from python_dtl_spark.catalog import QUERIES
+from python_dtl_spark.operators.dedup import release_all_cached
+from scripts.check_oracle import compare, duck_connection
 
-REPO = Path(__file__).resolve().parent.parent
-
-
-def _latest_round() -> int:
-    rounds = [
-        int(p.stem.split("_r")[1]) for p in REPO.glob("CORRECTNESS_r*.json")
-    ]
-    return max(rounds) if rounds else 0
-
-
-def test_history_reads_every_driver_file():
-    hist = _correctness_history()
-    latest = _latest_round()
-    if latest == 0:
-        return  # fresh checkout: ordering degrades to registration order
-    rows = json.loads((REPO / f"CORRECTNESS_r{latest:02d}.json").read_text())
-    for name in rows:
-        checked, _ = hist.get(name, (0, 0))
-        assert checked >= latest, name
-
-
-def test_window_holds_least_verified_queries():
-    # The first 50 exported entries are the driver's correctness window.
-    # No query may sit outside the window while a strictly-fresher one
-    # (more recently verified) occupies a slot inside it.  Uses the
-    # catalog's own ``freshness`` so the harness and this invariant can
-    # never disagree on when a re-verify override expires (round-7
-    # verdict: the two previously diverged by exactly one round).
-    hist = _correctness_history()
-    names = list(QUERIES)
-    window, outside = names[:50], names[50:]
-    if not outside:
-        return
-    max_in = max(sort_freshness(n, hist) for n in window)
-    min_out = min(sort_freshness(n, hist) for n in outside)
-    assert max_in <= min_out, (max_in, min_out)
-
-
-def test_never_verified_queries_lead_the_window():
-    hist = _correctness_history()
-    names = list(QUERIES)
-    fresh = [sort_freshness(n, hist) for n in names]
-    # ordering must be ascending staleness front-to-back
-    assert fresh == sorted(fresh)
-
-
-def test_no_oracle_rows_never_displace_verifiable_ones():
-    # oracle=None rows produce ``err: no_oracle`` every time they rotate
-    # into the driver's 50-slot window — only the bounded rows-only
-    # freshness cadence (``rows_only_due``: stalest first, at most
-    # _ROWS_ONLY_PER_ROUND per round) may spend window slots on them
-    # while any oracle-backed query sits outside.
-    from python_dtl_spark.catalog import _ROWS_ONLY_PER_ROUND, rows_only_due
-
-    names = list(QUERIES)
-    window, outside = names[:50], names[50:]
-    if not any(QUERIES[n].oracle is not None for n in outside):
-        return  # everything verifiable already fits in the window
-    due = rows_only_due()
-    rows_only_in_window = [n for n in window if QUERIES[n].oracle is None]
-    assert len(rows_only_in_window) <= _ROWS_ONLY_PER_ROUND
-    for n in rows_only_in_window:
-        assert n in due, n
-
-
-def test_rows_only_cadence_bounds_staleness():
-    # Every oracle=None query must have driver-committed "still runs"
-    # evidence no older than the cadence allows: with K rows-only
-    # queries rotating at most one per round, the worst backlog bound
-    # is cadence + K - 1 rounds.
-    from python_dtl_spark.catalog import _ROWS_ONLY_CADENCE
-
-    hist = _correctness_history()
-    latest = _latest_round()
-    if latest == 0:
-        return
-    rows_only = [n for n, q in QUERIES.items() if q.oracle is None]
-    bound = _ROWS_ONLY_CADENCE + len(rows_only) - 1
-    for n in rows_only:
-        checked, _ = hist.get(n, (0, 0))
-        # the due pick for the UPCOMING round counts as scheduled
-        from python_dtl_spark.catalog import rows_only_due
-
-        if n in rows_only_due(hist):
-            continue
-        assert latest + 1 - checked <= bound, (n, checked)
-
-
-def test_forced_reverify_names_are_registered():
-    from python_dtl_spark.catalog import _CHANGED_IN_ROUND
-
-    for name in _CHANGED_IN_ROUND:
-        assert name in QUERIES, name
+SWEEP_SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_oracle_keys_subset_of_queries():
     for name, q in QUERIES.items():
         assert q.fn is not None, name
-        if q.oracle is not None:
-            assert isinstance(q.oracle, str) and q.oracle.strip(), name
+        assert isinstance(q.oracle, str) and q.oracle.strip(), name
 
 
 def test_headline_queries_exist_and_have_oracles_where_expected():
@@ -364,25 +265,9 @@ def test_sketch_tolerance_flag_is_not_vacuous(spark):
         assert got[(e, x)] is want, (e, x, want)
 
 
-def _staged_r21():
-    """Import the staged r21/r22 graduation module by path (scripts/ is
-    not a package).  When the blocks are pasted into catalog.py in
-    their due rounds, these imports flip to catalog imports and the
-    tests keep running unchanged against the landed predicates."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "staged_r21_sketch_graduations",
-        REPO / "scripts" / "staged_r21_sketch_graduations.py",
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
 def test_approx_distinct_tolerance_flag_is_not_vacuous(spark):
-    """The staged dtl_approx_distinct_parts graduation hashes approx_ok
-    against a TRUE-constant oracle — a real check only if the flag CAN
+    """dtl_approx_distinct_parts hashes approx_ok against a
+    TRUE-constant oracle — a real check only if the flag CAN
     flip.  The predicate is the shared _sketch_within_tolerance (its
     boundary is pinned by test_sketch_tolerance_flag_is_not_vacuous);
     here pin the ROW's own measured pairs in-band and an out-of-band
@@ -418,7 +303,8 @@ def test_histogram_sketch_tolerance_flag_is_not_vacuous(spark):
     sketch bucket (NULL n_sk) fails rather than passing vacuously."""
     from pyspark.sql import functions as F
 
-    mod = _staged_r21()
+    from python_dtl_spark.catalog import _hist_n_within_tolerance
+
     cases = [
         # (n_sk, n_exact, n_total, expected)
         (10000, 10000, 100000, True),   # exact agreement
@@ -434,7 +320,7 @@ def test_histogram_sketch_tolerance_flag_is_not_vacuous(spark):
         "n_sk long, n_exact long, n_total long",
     ).select(
         "n_sk", "n_exact", "n_total",
-        mod._hist_n_within_tolerance(
+        _hist_n_within_tolerance(
             F.col("n_sk"), F.col("n_exact"), F.col("n_total")
         ).alias("ok"),
     )
@@ -452,7 +338,8 @@ def test_winsorize_sketch_tolerance_flag_is_not_vacuous(spark):
     NULL value requires NULL output."""
     from pyspark.sql import functions as F
 
-    mod = _staged_r21()
+    from python_dtl_spark.catalog import _winsorize_within_band
+
     cases = [
         # (v, w, expected)
         (5.0, 11.0, True),    # below band, clipped into [10,12]
@@ -471,7 +358,7 @@ def test_winsorize_sketch_tolerance_flag_is_not_vacuous(spark):
         [(v, w) for v, w, _ in cases], "v double, w double"
     ).select(
         "v", "w",
-        mod._winsorize_within_band(
+        _winsorize_within_band(
             F.col("v"), F.col("w"),
             F.lit(10.0), F.lit(12.0), F.lit(88.0), F.lit(92.0),
         ).alias("ok"),
@@ -604,3 +491,19 @@ def test_dtl_memo_seeding_skips_synthetic_keys(spark, monkeypatch):
         assert any("@" in key[2] for key in cat._TABLE_MEMO)
     finally:
         cat._clear_table_memo()
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_query_matches_oracle(spark, name):
+    """Every catalog row equals its DuckDB oracle at sf0.001: row count,
+    column names and kinds, and sorted cell values, compared exactly as
+    ``scripts/check_oracle.py`` does."""
+    query = QUERIES[name]
+    try:
+        got = query.fn(spark, SWEEP_SF_DIR).toPandas()
+    finally:
+        release_all_cached(spark)
+    with duck_connection(SWEEP_SF_DIR) as con:
+        want = con.execute(query.oracle).df()
+    problems = compare(name, got, want)
+    assert not problems, problems
