@@ -5964,8 +5964,9 @@ def _q_dsir_weights(spark, sf_dir):
     hash agg (≤ 10,000 groups, map-side partials), zero joins; the
     model is bucket-table-sized whatever the corpus.  Apply = feature
     explode → TWO broadcast joins against the ≤ 10,000-row models →
-    ONE doc-grain agg + id join-back; zero Python (plan-asserted in
-    tests/test_plans.py)."""
+    ONE doc-grain agg + id join-back in one lazy plan, cached only at
+    the pre-shuffle feature table (the totals' scalar subqueries are
+    pruned: no weight is emitted); zero Python (tests/test_plans.py)."""
     docs = _read(spark, sf_dir, "documents")
     # one-pass split fit over a SHARED pre-bucketed feature table
     # (r20): fit and scoring tokenize + md5-bucket the corpus ONCE
@@ -7059,15 +7060,15 @@ _register(
     f"""
     WITH RECURSIVE
     w(source, wt) AS (VALUES ('src1', 3), ('src2', 2), ('src3', 1)),
-    train0 AS (
+    train0 AS MATERIALIZED (
         SELECT doc_id, source, text FROM documents
         WHERE doc_id IS NOT NULL AND doc_id % 10 <> 0
-    ), gtoks AS (
+    ), gtoks AS MATERIALIZED (
         SELECT doc_id,
                list_filter(regexp_split_to_array(trim(text), '\\s+'),
                            t -> t <> '') AS tk
         FROM train0
-    ), gfeat AS (
+    ), gfeat AS MATERIALIZED (
         SELECT doc_id,
                CAST(len(tk) AS BIGINT) AS n_words,
                CAST(list_sum(list_transform(tk, t -> length(t))) AS DOUBLE)
@@ -7085,38 +7086,38 @@ _register(
                             'it','for','on','with','as','by','at','from'],
                            lower(t)))) AS stop_hits
         FROM gtoks
-    ), gate AS (
+    ), gate AS MATERIALIZED (
         SELECT doc_id FROM gfeat
         WHERE n_words >= 20 AND n_words <= 100000
           AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
           AND ttr >= 0.3 AND top_frac <= 0.12 AND stop_hits >= 1
-    ), jt AS (
+    ), jt AS MATERIALIZED (
         SELECT t.doc_id,
                list_filter(regexp_split_to_array(lower(trim(t.text)), '\\s+'),
                            x -> x <> '') AS t
         FROM train0 t JOIN gate USING (doc_id)
-    ), jsh AS (
+    ), jsh AS MATERIALIZED (
         SELECT doc_id,
                list_distinct(CASE WHEN len(t) >= 3
                  THEN [t[i] || ' ' || t[i+1] || ' ' || t[i+2]
                        for i in range(1, len(t) - 1)]
                  ELSE [array_to_string(t, ' ')] END) AS s
         FROM jt
-    ), jex AS (
+    ), jex AS MATERIALIZED (
         SELECT doc_id, unnest(s) AS f FROM jsh
-    ), jsz AS (
+    ), jsz AS MATERIALIZED (
         SELECT doc_id, CAST(len(s) AS BIGINT) AS sz FROM jsh
-    ), jcommon AS (
+    ), jcommon AS MATERIALIZED (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
         FROM jex a JOIN jex b ON a.f = b.f AND a.doc_id < b.doc_id
         GROUP BY 1, 2
-    ), jac AS (
+    ), jac AS MATERIALIZED (
         SELECT id_a, id_b
         FROM jcommon
         JOIN jsz sa ON jcommon.id_a = sa.doc_id
         JOIN jsz sb ON jcommon.id_b = sb.doc_id
         WHERE common / (sa.sz + sb.sz - common) >= 0.3
-    ), edges AS (
+    ), edges AS MATERIALIZED (
         SELECT id_a AS a, id_b AS b FROM jac
         UNION ALL
         SELECT id_b, id_a FROM jac
@@ -7124,35 +7125,35 @@ _register(
         SELECT doc_id, doc_id FROM gate
         UNION
         SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    ), labels AS (
+    ), labels AS MATERIALIZED (
         SELECT a AS doc_id, min(b) AS cl FROM reach GROUP BY a
-    ), surv AS (
+    ), surv AS MATERIALIZED (
         SELECT doc_id FROM labels WHERE doc_id = cl
-    ), toks AS (
+    ), toks AS MATERIALIZED (
         SELECT t.doc_id,
                list_filter(regexp_split_to_array(trim(t.text), '\\s+'),
                            x -> x <> '') AS tk
         FROM train0 t JOIN surv USING (doc_id)
-    ), etoks AS (
+    ), etoks AS MATERIALIZED (
         SELECT list_filter(regexp_split_to_array(trim(text), '\\s+'),
                            t -> t <> '') AS tk
         FROM documents WHERE doc_id % 10 = 0
-    ), efp AS (
+    ), efp AS MATERIALIZED (
         SELECT DISTINCT
                CAST(concat('0x', substr(md5(array_to_string(
                    tk[CAST(i AS INT) + 1 : CAST(i AS INT) + 8], ' ')), 1, 15))
                     AS BIGINT) AS h
         FROM etoks, UNNEST(range(0, greatest(len(tk) - 8 + 1, 0))) u(i)
-    ), wins AS (
+    ), wins AS MATERIALIZED (
         SELECT doc_id, CAST(i AS BIGINT) AS i,
                CAST(concat('0x', substr(md5(array_to_string(
                    tk[CAST(i AS INT) + 1 : CAST(i AS INT) + 8], ' ')), 1, 15))
                     AS BIGINT) AS h
         FROM toks, UNNEST(range(0, greatest(len(tk) - 8 + 1, 0))) u(i)
-    ), flagged AS (
+    ), flagged AS MATERIALIZED (
         SELECT doc_id, i, i + 7 AS e
         FROM wins WHERE h IN (SELECT h FROM efp)
-    ), isl AS (
+    ), isl AS MATERIALIZED (
         SELECT doc_id, i, e,
                CASE WHEN i > coalesce(max(e) OVER (
                         PARTITION BY doc_id ORDER BY i
@@ -7160,45 +7161,45 @@ _register(
                         -2) + 1
                     THEN 1 ELSE 0 END AS brk
         FROM flagged
-    ), isl2 AS (
+    ), isl2 AS MATERIALIZED (
         SELECT doc_id, i, e,
                sum(brk) OVER (PARTITION BY doc_id ORDER BY i
                               ROWS UNBOUNDED PRECEDING) AS island
         FROM isl
-    ), merged AS (
+    ), merged AS MATERIALIZED (
         SELECT doc_id, island, min(i) AS lo, max(e) AS hi
         FROM isl2 GROUP BY doc_id, island
-    ), covered AS (
+    ), covered AS MATERIALIZED (
         SELECT DISTINCT doc_id, lo + d AS idx
         FROM merged, UNNEST(range(0, hi - lo + 1)) v(d)
-    ), tokidx AS (
+    ), tokidx AS MATERIALIZED (
         SELECT doc_id, CAST(i AS BIGINT) AS idx,
                tk[CAST(i AS INT) + 1] AS tok
         FROM toks, UNNEST(range(0, len(tk))) u(i)
-    ), kept AS (
+    ), kept AS MATERIALIZED (
         SELECT t.doc_id, t.idx, t.tok
         FROM tokidx t LEFT JOIN covered c
           ON t.doc_id = c.doc_id AND t.idx = c.idx
         WHERE c.idx IS NULL
-    ), agg AS (
+    ), agg AS MATERIALIZED (
         SELECT doc_id, string_agg(tok, ' ' ORDER BY idx) AS txt,
                count(*) AS n_kept
         FROM kept GROUP BY doc_id
-    ), decon AS (
+    ), decon AS MATERIALIZED (
         SELECT t.doc_id,
                md5(coalesce(a.txt, '')) AS clean_fp,
                CAST(coalesce(a.n_kept, 0) AS BIGINT) AS n_tokens_kept
         FROM toks t LEFT JOIN agg a USING (doc_id)
-    ), dsrc AS (
+    ), dsrc AS MATERIALIZED (
         SELECT d.doc_id, d.clean_fp, d.n_tokens_kept, t.source
         FROM decon d JOIN train0 t USING (doc_id)
-    ), n AS (
+    ), n AS MATERIALIZED (
         SELECT s.source, count(*) AS n, any_value(w.wt) AS wt
         FROM dsrc s JOIN w USING (source)
         GROUP BY s.source
-    ), k AS (SELECT min(n // wt) AS k FROM n),
-    q AS (SELECT source, wt * (SELECT k FROM k) AS quota FROM n),
-    mix AS (
+    ), k AS MATERIALIZED (SELECT min(n // wt) AS k FROM n),
+    q AS MATERIALIZED (SELECT source, wt * (SELECT k FROM k) AS quota FROM n),
+    mix AS MATERIALIZED (
         SELECT doc_id, source, clean_fp, n_tokens_kept FROM (
             SELECT d.doc_id, d.source, d.clean_fp, d.n_tokens_kept, q.quota,
                    row_number() OVER (
@@ -7243,11 +7244,11 @@ def _q_dsir_emit(spark, sf_dir):
     selection = approxQuantile coarse floor (pushed Filter) +
     TakeOrderedAndProject (per-partition top-k, no SinglePartition
     exchange); upsample = broadcast map join + row-local explode,
-    ZERO exchanges.  The executed chain's ONLY data exchanges are the
-    three model-building hash aggs (two bucket fits + the doc-grain
-    scoring agg) — the mix/shard windows run on the selection's
-    already-co-located slice (plan-asserted in
-    tests/test_plans.py::test_dsir_emit_chain_plan_shape).  Zero
+    ZERO exchanges.  The chain's corpus-sized exchanges are the model
+    hash aggs (bucket fit + doc-grain scoring agg); the totals' scalar
+    subqueries sum ≤ 10,000 model rows in one partition, and the
+    mix/shard windows shuffle only the k-row selection (plan-asserted
+    in tests/test_plans.py::test_dsir_emit_chain_plan_shape).  Zero
     Python end-to-end."""
     docs = _read(spark, sf_dir, "documents")
     # one-pass split fit over a SHARED pre-bucketed feature table
@@ -7588,7 +7589,9 @@ def _bpe_stage_sql(
     doc_apply_merge oracle share.  ``join_tp`` optionally cross-joins
     a derived 1-row pair table (the composed fit oracle); a NULL pair
     makes the stage an exact identity — the SQL replay of the
-    engine's early stop when no pair reaches min_count."""
+    engine's early stop when no pair reaches min_count.  Each link is
+    MATERIALIZED: two CTEs read it, and inlined links re-run the whole
+    chain above them per reader."""
     t_in, t_out = f"{chain}{i}", f"{chain}{i + 1}"
     x = f"{chain}{i}"  # unique suffix for this stage's helper CTEs
     return f""", m_{x} AS (
@@ -7608,7 +7611,7 @@ def _bpe_stage_sql(
         ) WHERE rn % 2 = 1
     ), sl_{x} AS (
         SELECT doc_id, list(j ORDER BY j) AS s FROM st_{x} GROUP BY doc_id
-    ), {t_out} AS (
+    ), {t_out} AS MATERIALIZED (
         SELECT {t_in}.doc_id,
                list_filter([
                    CASE WHEN list_contains(coalesce(sl_{x}.s, []), k)
@@ -7861,7 +7864,7 @@ def _bpe_fit_round_sql(i: int, min_count: int) -> str:
             FROM s{i} WHERE len(t) >= 2
         )
         GROUP BY 1, 2 HAVING count(*) >= {min_count}
-    ), tp{i} AS (
+    ), tp{i} AS MATERIALIZED (
         SELECT l, r FROM (SELECT l, r FROM cand{i} ORDER BY c DESC, l, r LIMIT 1)
         UNION ALL
         SELECT NULL, NULL WHERE (SELECT count(*) FROM cand{i}) = 0
@@ -7875,12 +7878,12 @@ _register(
     "pipeline_bpe_tokenize",
     _q_pipeline_bpe_tokenize,
     f"""
-    WITH s0 AS (
+    WITH s0 AS MATERIALIZED (
         SELECT doc_id, list_transform({_TOKS_SQL}, x -> lower(x)) AS t
         FROM documents
         WHERE {sampling.hash_bucket_sql("doc_id", seed=_BPE_PIPE_SEED)}
               < {_BPE_PIPE_CUT}
-    ), f0 AS (
+    ), f0 AS MATERIALIZED (
         SELECT doc_id, list_transform({_TOKS_SQL}, x -> lower(x)) AS t
         FROM documents
     )"""

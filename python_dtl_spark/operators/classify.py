@@ -770,7 +770,8 @@ def dsir_fit(
     repo's md5 ``hash_bucket`` recipe, so an ANSI-SQL oracle replays
     the bucketing bit-for-bit).  The model is bucket-count-sized
     (≤ 10,000 rows) whatever the corpus — broadcastable by
-    construction.
+    construction.  A NULL feature (only possible from a ``tokens_col``
+    holding NULL tokens) has no bucket and counts in no model.
 
     ``sample_fraction`` is the 100 TB valve (deterministic md5-hash
     document sample, the nb_fit/lm_fit contract); ``seed`` salts the
@@ -796,6 +797,9 @@ def dsir_fit(
     return (
         corpus.select(F.explode(_dsir_features(toks_expr)).alias("__feat"))
         .select(hash_bucket(F.col("__feat"), seed=seed).alias("bucket"))
+        # the filter Spark infers on dsir_weights' model joins: the joins
+        # and totals subqueries then plan one fit, and AQE reuses it
+        .where(F.col("bucket").isNotNull())
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
     )
@@ -822,8 +826,10 @@ def dsir_features(
 
     The table is persisted here (MEMORY_AND_DISK — evictable,
     spillable) and registered with the release registry the
-    bench/oracle harnesses drain; the fit's totals collect
-    materialises it and the scoring plan reads the cache.  At extreme
+    bench/oracle harnesses drain; the first action over the scoring
+    plan materialises it, and the fit, the model totals and the
+    scoring all read the cache.  Its rows are pre-shuffle, so the
+    cache pins no shuffle partition count.  At extreme
     scale the cache is feature-occurrence-sized — callers who would
     rather re-tokenize than spill it simply keep ``features=None``
     (the default two-pass behaviour, bit-identical output)."""
@@ -874,11 +880,12 @@ def dsir_fit_split(
     document contributed a feature to it; NULL conditions count as
     false, exactly like the filter).
 
-    Returns ``(target_counts, raw_counts)``.  The shared bucket table
-    (≤ 10,000 rows) is persisted and registered with the release
-    registry the bench/oracle harnesses drain, so the two totals
-    collects inside :func:`dsir_weights` trigger one fit pass, not
-    two.
+    Returns ``(target_counts, raw_counts)``, both lazy slices of one
+    bucket-grain aggregate.  Nothing is cached: a cache above the
+    shuffle would keep ``spark.sql.shuffle.partitions`` partitions on
+    every read of a ≤ 10,000-row model, and reads of the two slices
+    inside one :func:`dsir_weights` plan share the aggregate's shuffle
+    where their pruned columns match.
 
     ``features``: a :func:`dsir_features` table (MUST carry
     ``__is_t``, i.e. be built with the same ``target_cond``, and the
@@ -886,7 +893,6 @@ def dsir_fit_split(
     instead of re-tokenizing ``df``, sharing the explode+md5 pass
     with the :func:`dsir_weights` call fed the same table.
     """
-    from python_dtl_spark.operators.dedup import _release_after
     from python_dtl_spark.operators.sampling import hash_bucket
 
     if features is not None:
@@ -908,21 +914,21 @@ def dsir_fit_split(
         ).select(
             hash_bucket(F.col("__feat"), seed=seed).alias("bucket"), "__is_t"
         )
+    # NOT NULL bucket: the dsir_fit filter, for the same shuffle reuse
     both = (
-        bucketed.groupBy("bucket")
+        bucketed.where(F.col("bucket").isNotNull()).groupBy("bucket")
         .agg(
             F.count(F.lit(1)).cast("long").alias("__freq_all"),
             F.sum(F.when(F.col("__is_t"), 1).otherwise(0))
             .cast("long")
             .alias("__freq_t"),
         )
-        .persist()
     )
     tc = both.filter(F.col("__freq_t") > 0).select(
         "bucket", F.col("__freq_t").alias("freq")
     )
     rc = both.select("bucket", F.col("__freq_all").alias("freq"))
-    return _release_after(tc, both), rc
+    return tc, rc
 
 
 def _dsir_weights_row_local(
@@ -1077,7 +1083,7 @@ def dsir_weights(
                 - log((r_f + alpha) / (R + alpha·B))
 
     where ``T``/``R`` are the models' total counts (two scalar
-    collects — model-sized, the KMeans-centroid pattern).  High
+    subqueries of the scoring plan over the ≤ 10,000-row models).  High
     ``log_weight`` = the document looks like the target domain.  A
     document with no features scores 0.0 (an empty product ratio).
 
@@ -1085,7 +1091,8 @@ def dsir_weights(
     against each ≤ 10,000-row bucket model → one doc-grain hash
     aggregation (map-side partials) → id join-back; never a Python
     UDF, never a per-feature shuffle — the audited nb_apply /
-    lm_perplexity shape.
+    lm_perplexity shape.  The join tier is fully lazy: building it
+    runs no Spark job and caches nothing.
 
     ``row_local=True`` is the STREAMING tier (the
     ``nb_apply``/``lm_perplexity`` row_local contract): both fitted
@@ -1102,7 +1109,7 @@ def dsir_weights(
     the shared pre-bucketed rows instead of re-tokenizing (ignored by
     the ``row_local`` tier, which embeds models in expressions).
     """
-    from python_dtl_spark.operators.sampling import _BUCKETS
+    from python_dtl_spark.operators.sampling import _BUCKETS, hash_bucket
 
     for emitted in (
         out_col, "n_feats", "sum_target_freq", "sum_raw_freq",
@@ -1137,35 +1144,23 @@ def dsir_weights(
             out_col,
             max_literal_cells,
         )
-    # Persist both ≤10k-row models: their COMPUTATION is a full-corpus
-    # explode+agg each, and without the cache it runs twice — once for
-    # the totals collect here, once inside the scoring plan (measured
-    # on the r14 bench: ~1s per redundant fit pass at sf0.1).  The
-    # cache is model-sized (bounded rows), registered with the shared
-    # release registry the bench/oracle harnesses drain.
-    from python_dtl_spark.operators.dedup import _release_after
+    # Model totals T/R as scalar subqueries: the scoring plan computes
+    # them, with no driver round trip; the denominator stays the double
+    # ``total + alpha·B``.
+    def _denom(model):
+        total = model.agg(F.coalesce(F.sum("freq"), F.lit(0))).scalar()
+        return total + F.lit(alpha * _BUCKETS)
 
-    target_counts = target_counts.persist()
-    raw_counts = raw_counts.persist()
-    # model totals: two scalar fetches over <=10k-row model tables
-    t_total = int(
-        target_counts.agg(F.coalesce(F.sum("freq"), F.lit(0))).collect()[0][0]
-    )
-    r_total = int(
-        raw_counts.agg(F.coalesce(F.sum("freq"), F.lit(0))).collect()[0][0]
-    )
-    t_denom = t_total + alpha * _BUCKETS
-    r_denom = r_total + alpha * _BUCKETS
-    toks_expr = (
-        F.col(tokens_col)
-        if tokens_col is not None
-        else tokens(F.lower(F.col(text_col)))
-    )
-    from python_dtl_spark.operators.sampling import hash_bucket
-
+    t_denom = _denom(target_counts)
+    r_denom = _denom(raw_counts)
     if features is not None:
         feats = features.select("__ds_id", "bucket")
     else:
+        toks_expr = (
+            F.col(tokens_col)
+            if tokens_col is not None
+            else tokens(F.lower(F.col(text_col)))
+        )
         feats = df.select(
             F.col(id_col).alias("__ds_id"),
             F.explode(_dsir_features(toks_expr)).alias("__feat"),
@@ -1174,8 +1169,20 @@ def dsir_weights(
         )
     tgt = target_counts.select("bucket", F.col("freq").alias("__tf"))
     raw = raw_counts.select("bucket", F.col("freq").alias("__rf"))
-    joined = feats.join(F.broadcast(tgt), on="bucket", how="left").join(
-        F.broadcast(raw), on="bucket", how="left"
+    joined = (
+        feats.join(F.broadcast(tgt), on="bucket", how="left")
+        .join(F.broadcast(raw), on="bucket", how="left")
+        .select(
+            "__ds_id",
+            "__tf",
+            "__rf",
+            (
+                F.log((F.coalesce("__tf", F.lit(0)) + F.lit(alpha)) / t_denom)
+                - F.log(
+                    (F.coalesce("__rf", F.lit(0)) + F.lit(alpha)) / r_denom
+                )
+            ).alias("__lw"),
+        )
     )
     sums = joined.groupBy("__ds_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_feats"),
@@ -1191,38 +1198,25 @@ def dsir_weights(
         F.sum(F.when(F.col("__rf").isNull(), 1).otherwise(0))
         .cast("long")
         .alias("n_unseen_raw"),
-        F.sum(
-            F.log(
-                (F.coalesce("__tf", F.lit(0)) + F.lit(alpha))
-                / F.lit(t_denom)
-            )
-            - F.log(
-                (F.coalesce("__rf", F.lit(0)) + F.lit(alpha))
-                / F.lit(r_denom)
-            )
-        ).alias("__dw"),
+        F.sum("__lw").alias("__dw"),
     )
     scored = df.join(
         sums, on=df[id_col] == sums["__ds_id"], how="left"
     ).drop("__ds_id")
-    return _release_after(
-        scored.select(
-            *[F.col(c) for c in df.columns],
-            F.coalesce("n_feats", F.lit(0)).cast("long").alias("n_feats"),
-            F.coalesce("sum_target_freq", F.lit(0))
-            .cast("long")
-            .alias("sum_target_freq"),
-            F.coalesce("sum_raw_freq", F.lit(0))
-            .cast("long")
-            .alias("sum_raw_freq"),
-            F.coalesce("n_unseen_target", F.lit(0))
-            .cast("long")
-            .alias("n_unseen_target"),
-            F.coalesce("n_unseen_raw", F.lit(0))
-            .cast("long")
-            .alias("n_unseen_raw"),
-            F.coalesce("__dw", F.lit(0.0)).alias(out_col),
-        ),
-        target_counts,
-        raw_counts,
+    return scored.select(
+        *[F.col(c) for c in df.columns],
+        F.coalesce("n_feats", F.lit(0)).cast("long").alias("n_feats"),
+        F.coalesce("sum_target_freq", F.lit(0))
+        .cast("long")
+        .alias("sum_target_freq"),
+        F.coalesce("sum_raw_freq", F.lit(0))
+        .cast("long")
+        .alias("sum_raw_freq"),
+        F.coalesce("n_unseen_target", F.lit(0))
+        .cast("long")
+        .alias("n_unseen_target"),
+        F.coalesce("n_unseen_raw", F.lit(0))
+        .cast("long")
+        .alias("n_unseen_raw"),
+        F.coalesce("__dw", F.lit(0.0)).alias(out_col),
     )

@@ -956,9 +956,10 @@ def top_fraction(
         )
     # The selection needs up to four passes over the scored input
     # (count, quantile, slice guard, final plan) — if the score is an
-    # upstream computation (e.g. dsir_weights' broadcast-join scoring)
-    # each pass would RECOMPUTE it (measured: pipeline_dsir_select ran
-    # 9s vs doc_dsir_weights' 1.6s before this persist).  Cache the
+    # upstream computation (e.g. dsir_weights' one lazy plan: model
+    # fits, totals subqueries, broadcast-join scoring) each pass would
+    # RECOMPUTE all of it (measured: pipeline_dsir_select ran 9s vs
+    # doc_dsir_weights' 1.6s before this persist).  Cache the
     # filtered input once (MEMORY_AND_DISK — evictable, spillable) and
     # register it with the module-shared release registry the bench /
     # oracle harnesses drain between queries.  At 100 TB, pass a

@@ -431,7 +431,8 @@ AUDITED = {
         "feature explode -> BroadcastHashJoin against BOTH <=10k-row "
         "bucket models -> ONE doc-grain hash aggregate with map-side "
         "partials -> id join-back; zero Python, never a per-feature "
-        "shuffle (the fit side is one bucket-grain agg, zero joins)"
+        "shuffle (the fit side is one bucket-grain agg, zero joins); "
+        "one lazy plan whose only cache is the pre-shuffle feature table"
     ),
     "pipeline_dsir_select": (
         "rank-based top-25% selection: the approxQuantile coarse "
@@ -474,9 +475,10 @@ AUDITED = {
         "DSIR select -> uniform mix -> epochs -> shards under one "
         "hash: five broadcast joins (two bucket models, mix quotas, "
         "epoch map), TakeOrderedAndProject for the global selection, "
-        "and the ONLY data exchanges are the three model-building "
-        "hash aggs — the mix/shard windows inherit the selection's "
-        "co-located slice (asserted in tests/test_plans.py)"
+        "corpus-sized exchanges only in the model-building hash aggs; "
+        "the model totals are scalar subqueries over <=10k model rows "
+        "and the mix/shard windows shuffle only the k-row selection "
+        "(asserted in tests/test_plans.py)"
     ),
     "pipeline_floor_select": (
         "floor-only selection (registered r15, top_fraction's 100 TB "

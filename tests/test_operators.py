@@ -5603,6 +5603,37 @@ def test_dsir_shared_features_match_two_pass(spark):
         pass
 
 
+def test_dsir_weights_construction_launches_no_job(spark):
+    """Building the DSIR fit and scoring plans from already-read frames
+    runs no Spark job: the model totals are scalar subqueries of the
+    scoring plan, not driver-side collects."""
+    from python_dtl_spark.operators import classify
+    from python_dtl_spark.operators.dedup import release_all_cached
+
+    docs = spark.createDataFrame(
+        [(1, "a b c", "t"), (2, "b c d", "r"), (3, "c d e", "r")],
+        "doc_id long, text string, source string",
+    )
+    cond = F.col("source") == "t"
+    sc = spark.sparkContext
+    sc.setJobGroup("dsir-construction", "no jobs expected")
+    try:
+        tc = classify.dsir_fit(docs.where(cond))
+        rc = classify.dsir_fit(docs)
+        plain = classify.dsir_weights(docs, tc, rc)
+        feats = classify.dsir_features(docs, cond)
+        stc, src = classify.dsir_fit_split(docs, cond, features=feats)
+        shared = classify.dsir_weights(docs, stc, src, features=feats)
+        jobs = sc.statusTracker().getJobIdsForGroup("dsir-construction")
+    finally:
+        sc.setJobGroup(None, None)
+    try:
+        assert list(jobs) == []
+        assert plain.count() == shared.count() == 3
+    finally:
+        release_all_cached(spark)
+
+
 def test_dsir_weights_match_bruteforce_reference(spark):
     """DSIR importance weights (Xie et al. 2023) vs a literal Python
     reference: hashed unigram+bigram bucket counts for target and raw,

@@ -124,6 +124,51 @@ def _exec_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _plan_nodes(node, subqueries: list) -> list:
+    """Every physical operator under ``node``, through adaptive stages
+    and cached relations; Subquery/ReusedSubquery plans are cut out
+    into ``subqueries`` instead."""
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        kids = [node.executedPlan()]
+    elif name.endswith("QueryStage"):
+        kids = [node.plan()]
+    elif name == "InMemoryTableScan":
+        kids = [node.relation().cachedPlan()]
+    else:
+        kids = seq(node.children()) + seq(node.innerChildren())
+    nodes = [node]
+    for kid in kids:
+        if kid.nodeName() in ("Subquery", "ReusedSubquery"):
+            subqueries.append(kid)
+        else:
+            nodes += _plan_nodes(kid, subqueries)
+    return nodes
+
+
+def _main_query_plan(df) -> str:
+    """The executed plan of ``df``, one operator per line, with its
+    scalar subqueries cut out.  Each cut subquery must be a model
+    total: an ungrouped ``HashAggregate(keys=[]`` over a bucket model
+    (``dsir_weights``' T/R), whose global sum runs an ``Exchange
+    SinglePartition`` over at most 10,000 model rows, not over the
+    corpus."""
+    subqueries: list = []
+    main = _plan_nodes(df._jdf.queryExecution().executedPlan(), subqueries)
+    for sq in subqueries:
+        if sq.nodeName() == "ReusedSubquery":
+            sq = sq.child()
+        lines = [n.simpleString(1000) for n in _plan_nodes(sq, [])]
+        aggs = [ln for ln in lines if ln.startswith("HashAggregate")]
+        assert aggs and aggs[0].startswith("HashAggregate(keys=[],"), lines
+        assert any("bucket" in ln for ln in lines), lines
+    return "\n".join(n.simpleString(1000) for n in main)
+
+
 def test_asof_join_is_single_shuffle_no_nested_loop(spark):
     from pyspark.sql import functions as F
 
@@ -1242,6 +1287,41 @@ def test_dsir_weights_is_broadcast_model_joins_single_doc_agg(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def test_dsir_weights_caches_nothing_past_a_shuffle(spark):
+    """The catalog-shaped DSIR scoring (shared feature table, split
+    fit, scoring) caches no plan that holds an Exchange.  A cached
+    plan keeps its output partitioning, so a cache above a shuffle
+    would pin spark.sql.shuffle.partitions tasks on every read of a
+    <=10k-row model; the only cache left is the pre-shuffle feature
+    table."""
+    from pyspark.sql import functions as F
+
+    from python_dtl_spark.operators import classify
+    from python_dtl_spark.operators.dedup import release_all_cached
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    cond = F.col("source") == "src1"
+    feats = classify.dsir_features(docs, cond, seed="p1")
+    tc, rc = classify.dsir_fit_split(docs, cond, seed="p1", features=feats)
+    out = classify.dsir_weights(docs, tc, rc, seed="p1", features=feats)
+    try:
+        out.collect()
+        pending = [out._jdf.queryExecution().executedPlan()]
+        cached = []
+        while pending:
+            subqueries: list = []
+            for node in _plan_nodes(pending.pop(), subqueries):
+                if node.nodeName() == "InMemoryTableScan":
+                    cached.append(node.relation().cachedPlan())
+            pending += subqueries
+        assert cached
+        for plan in cached:
+            names = [n.nodeName() for n in _plan_nodes(plan, [])]
+            assert not any("Exchange" in n for n in names), names
+    finally:
+        release_all_cached(spark)
+
+
 def test_ppl_delta_select_plan_shape(spark):
     """The excess-perplexity composition (pipeline_ppl_delta_select):
     every ≤300-row LM model join (target + reference unigram/bigram
@@ -1802,8 +1882,9 @@ def test_dsir_emit_chain_plan_shape(spark):
     epoch map — never SMJ / nested loop / cartesian), zero Python
     anywhere, and the global selection rank planned as
     TakeOrderedAndProject — Catalyst rewrites the literal-limit
-    row_number into a per-partition top-k + merge, so there is NO
-    SinglePartition exchange at all; the data exchanges left are the
+    row_number into a per-partition top-k + merge, so the main query
+    has NO SinglePartition exchange (only the model totals' scalar
+    subqueries sum their <=10k rows in one); the data exchanges left are the
     three model-building hash aggregations (two bucket fits + the
     doc-grain scoring agg) plus, since the r21 top_fraction
     threshold refinement, the k-row repartitions of the mix/shard
@@ -1846,7 +1927,9 @@ def test_dsir_emit_chain_plan_shape(spark):
         assert m.group(1) in ("doc_id", "__ds_id"), plan
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
     assert "TakeOrderedAndProject" in plan, plan
-    assert "Exchange SinglePartition" not in plan, plan
+    # the model totals' scalar subqueries sum <=10k model rows in one
+    # partition; the main query must have no single-partition exchange
+    assert "Exchange SinglePartition" not in _main_query_plan(out), plan
     assert "Exchange rangepartitioning" not in plan, plan
     hash_exchanges = _re.findall(r"Exchange hashpartitioning\((\w+)", plan)
     # source/shard: the post-selection window repartitions — inputs are
