@@ -5964,14 +5964,15 @@ def _q_dsir_weights(spark, sf_dir):
     hash agg (≤ 10,000 groups, map-side partials), zero joins; the
     model is bucket-table-sized whatever the corpus.  Apply = feature
     explode → TWO broadcast joins against the ≤ 10,000-row models →
-    ONE doc-grain agg + id join-back in one lazy plan, cached only at
-    the pre-shuffle feature table (the totals' scalar subqueries are
-    pruned: no weight is emitted); zero Python (tests/test_plans.py)."""
+    ONE doc-grain agg + id join-back in one lazy plan that caches
+    nothing and computes one bucket-grain shuffle for both models (the
+    totals' scalar subqueries are pruned: no weight is emitted); zero
+    Python (tests/test_plans.py)."""
     docs = _read(spark, sf_dir, "documents")
-    # one-pass split fit over a SHARED pre-bucketed feature table
-    # (r20): fit and scoring tokenize + md5-bucket the corpus ONCE
-    # between them — identical tables to the two dsir_fit calls this
-    # replaced
+    # one-pass split fit over a SHARED pre-bucketed feature plan: its
+    # target and raw slices compute one bucket shuffle between them
+    # (AQE reuses it), and the scoring explodes the corpus once more —
+    # identical tables to the two dsir_fit calls this replaced
     feats = classify.dsir_features(
         docs, F.col("source") == "src1", seed="ds1"
     )
@@ -6026,10 +6027,10 @@ def _q_dsir_select(spark, sf_dir):
     output is exactly the true top-k regardless of the prefilter
     (guarded fallback)."""
     docs = _read(spark, sf_dir, "documents")
-    # one-pass split fit over a SHARED pre-bucketed feature table
-    # (r20): fit and scoring tokenize + md5-bucket the corpus ONCE
-    # between them — identical tables to the two dsir_fit calls this
-    # replaced
+    # one-pass split fit over a SHARED pre-bucketed feature plan: its
+    # target and raw slices compute one bucket shuffle between them
+    # (AQE reuses it), and the scoring explodes the corpus once more —
+    # identical tables to the two dsir_fit calls this replaced
     feats = classify.dsir_features(
         docs, F.col("source") == "src1", seed="ds1"
     )
@@ -6219,10 +6220,10 @@ def _q_dsir_resample(spark, sf_dir):
     floor + TakeOrderedAndProject (no SinglePartition exchange);
     probed sublinear at 32× (SCALING.md staged-r15 section)."""
     docs = _read(spark, sf_dir, "documents")
-    # one-pass split fit over a SHARED pre-bucketed feature table
-    # (r20): fit and scoring tokenize + md5-bucket the corpus ONCE
-    # between them — identical tables to the two dsir_fit calls this
-    # replaced
+    # one-pass split fit over a SHARED pre-bucketed feature plan: its
+    # target and raw slices compute one bucket shuffle between them
+    # (AQE reuses it), and the scoring explodes the corpus once more —
+    # identical tables to the two dsir_fit calls this replaced
     feats = classify.dsir_features(
         docs, F.col("source") == "src1", seed="ds1"
     )
@@ -7251,10 +7252,10 @@ def _q_dsir_emit(spark, sf_dir):
     in tests/test_plans.py::test_dsir_emit_chain_plan_shape).  Zero
     Python end-to-end."""
     docs = _read(spark, sf_dir, "documents")
-    # one-pass split fit over a SHARED pre-bucketed feature table
-    # (r20): fit and scoring tokenize + md5-bucket the corpus ONCE
-    # between them — identical tables to the two dsir_fit calls this
-    # replaced
+    # one-pass split fit over a SHARED pre-bucketed feature plan: its
+    # target and raw slices compute one bucket shuffle between them
+    # (AQE reuses it), and the scoring explodes the corpus once more —
+    # identical tables to the two dsir_fit calls this replaced
     feats = classify.dsir_features(
         docs, F.col("source") == "src1", seed="ds1"
     )
@@ -8536,10 +8537,11 @@ def _q_knn_classify(spark, sf_dir):
     raising query to an error row, so even a guard refusal cannot
     abort a whole bench run.
 
-    Scale shape: besides the table read, one construct job (that
-    collect); the action scores the corpus in the fold kernel, chunk
-    by chunk, keeping each chunk's per-query top-k before the ranking
-    window."""
+    Scale shape: one construct job, that collect, is the only read of
+    the table; the action is one mapInArrow stage over spark.range
+    slices of the broadcast corpus, ceil(n² / CELLS_PER_TASK) Python
+    tasks (one at sf0.01, four at sf0.1), each ranking and voting its
+    slice of queries against every vector: no shuffle, window or join."""
     emb = _read(spark, sf_dir, "embeddings")
     return similarity.knn_classify(emb, k=10).select(
         "vec_id", "predicted_label", "votes"

@@ -816,24 +816,21 @@ def dsir_features(
     """The SHARED pre-bucketed DSIR feature table (r20): one
     ``(__ds_id, bucket[, __is_t])`` row per unigram/bigram feature
     occurrence, hashed with exactly the expressions
-    :func:`dsir_fit_split` and :func:`dsir_weights` use internally —
-    so a fit and a scoring pass fed the same table (their
-    ``features=`` parameter) tokenize + md5-bucket the corpus ONCE
-    instead of twice (the md5 per feature string is the dominant
-    per-row cost of both passes; measured r20).  ``__is_t`` is
-    emitted only when ``target_cond`` is given (NULL conditions count
-    as false, exactly like :func:`dsir_fit_split`'s filter).
+    :func:`dsir_fit_split` and :func:`dsir_weights` use internally.
+    ``__is_t`` is emitted only when ``target_cond`` is given (NULL
+    conditions count as false, exactly like :func:`dsir_fit_split`'s
+    filter).
 
-    The table is persisted here (MEMORY_AND_DISK — evictable,
-    spillable) and registered with the release registry the
-    bench/oracle harnesses drain; the first action over the scoring
-    plan materialises it, and the fit, the model totals and the
-    scoring all read the cache.  Its rows are pre-shuffle, so the
-    cache pins no shuffle partition count.  At extreme
-    scale the cache is feature-occurrence-sized — callers who would
-    rather re-tokenize than spill it simply keep ``features=None``
-    (the default two-pass behaviour, bit-identical output)."""
-    from python_dtl_spark.operators.dedup import _release_after
+    The table is a lazy plan, not a cache.  Fed to both
+    :func:`dsir_fit_split` and :func:`dsir_weights` (their
+    ``features=`` parameter), it gives the fit's target and raw slices
+    one identical bucket aggregate, so AQE computes its shuffle once and
+    reuses it for the other slice; the scoring side explodes the
+    documents once more.  A cache here would cost that reuse: AQE wraps
+    each read of a cached relation in its own table-cache stage, and
+    exchanges above two different stages never canonicalize equal.
+    Without the cache, all four catalog DSIR rows measured as fast or
+    faster at sf0.01 and sf0.1 on 4 vCPUs."""
     from python_dtl_spark.operators.sampling import hash_bucket
 
     toks_expr = (
@@ -850,13 +847,11 @@ def dsir_features(
         if target_cond is not None
         else []
     )
-    out = df.select(*cols, *flag).select(
+    return df.select(*cols, *flag).select(
         "__ds_id",
         hash_bucket(F.col("__feat"), seed=seed).alias("bucket"),
         *(["__is_t"] if target_cond is not None else []),
     )
-    out = out.persist()
-    return _release_after(out, out)
 
 
 def dsir_fit_split(
@@ -883,15 +878,15 @@ def dsir_fit_split(
     Returns ``(target_counts, raw_counts)``, both lazy slices of one
     bucket-grain aggregate.  Nothing is cached: a cache above the
     shuffle would keep ``spark.sql.shuffle.partitions`` partitions on
-    every read of a ≤ 10,000-row model, and reads of the two slices
-    inside one :func:`dsir_weights` plan share the aggregate's shuffle
-    where their pruned columns match.
+    every read of a ≤ 10,000-row model.  Both counts are fields of one
+    struct column and each slice filters on its own field, so column
+    pruning leaves the same aggregate under both: inside one
+    :func:`dsir_weights` plan the two slices compute one shuffle.
 
     ``features``: a :func:`dsir_features` table (MUST carry
     ``__is_t``, i.e. be built with the same ``target_cond``, and the
-    same ``seed``) — the fit then aggregates the pre-bucketed rows
-    instead of re-tokenizing ``df``, sharing the explode+md5 pass
-    with the :func:`dsir_weights` call fed the same table.
+    same ``seed``) — the fit then aggregates its pre-bucketed rows
+    instead of building the same explode+md5 expressions from ``df``.
     """
     from python_dtl_spark.operators.sampling import hash_bucket
 
@@ -914,20 +909,28 @@ def dsir_fit_split(
         ).select(
             hash_bucket(F.col("__feat"), seed=seed).alias("bucket"), "__is_t"
         )
-    # NOT NULL bucket: the dsir_fit filter, for the same shuffle reuse
+    # NOT NULL bucket: the dsir_fit filter, for the same shuffle reuse.
+    # The counts are fields of ONE aggregate column, and each slice
+    # filters on its field (the raw filter is always true): without a
+    # filter, the optimizer would fold the projected field back into a
+    # pruned aggregate, and the slices would shuffle separately.
     both = (
         bucketed.where(F.col("bucket").isNotNull()).groupBy("bucket")
         .agg(
-            F.count(F.lit(1)).cast("long").alias("__freq_all"),
-            F.sum(F.when(F.col("__is_t"), 1).otherwise(0))
-            .cast("long")
-            .alias("__freq_t"),
+            F.struct(
+                F.count(F.lit(1)).cast("long").alias("all"),
+                F.sum(F.when(F.col("__is_t"), 1).otherwise(0))
+                .cast("long")
+                .alias("t"),
+            ).alias("__freq")
         )
     )
-    tc = both.filter(F.col("__freq_t") > 0).select(
-        "bucket", F.col("__freq_t").alias("freq")
+    tc = both.filter(F.col("__freq.t") > 0).select(
+        "bucket", F.col("__freq.t").alias("freq")
     )
-    rc = both.select("bucket", F.col("__freq_all").alias("freq"))
+    rc = both.filter(F.col("__freq.all") > 0).select(
+        "bucket", F.col("__freq.all").alias("freq")
+    )
     return tc, rc
 
 
@@ -1105,9 +1108,10 @@ def dsir_weights(
     precision — equality-tested).
 
     ``features``: a :func:`dsir_features` table built from THIS ``df``
-    with the same ``seed`` — the scoring explode+md5 pass then reads
-    the shared pre-bucketed rows instead of re-tokenizing (ignored by
-    the ``row_local`` tier, which embeds models in expressions).
+    with the same ``seed`` — the scoring pass then reads the same
+    pre-bucketed plan as the fit (a lazy plan, so it still explodes the
+    corpus itself; ignored by the ``row_local`` tier, which embeds
+    models in expressions).
     """
     from python_dtl_spark.operators.sampling import _BUCKETS, hash_bucket
 

@@ -5,7 +5,10 @@ and broadcast, the corpus streams through a ``mapInArrow`` numpy kernel
 that folds dot products one dimension at a time (bit-identical to the
 SQL ``zip_with``/``aggregate`` fold) and keeps each chunk's per-query
 top-k, and a window partitioned by query ranks the survivors (scales:
-each query's ranking is an independent partition).
+each query's ranking is an independent partition).  Exact kNN
+classification, whose query set IS the corpus, collects the corpus once
+and runs the whole leave-one-out rank and vote in one such kernel stage
+(no shuffle); both kernels share :func:`_fold_kit`.
 
 Scale path: IVF-style bucketed search — corpus pre-partitioned into
 buckets by random-hyperplane LSH; queries probe only matching buckets.
@@ -18,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from python_dtl_spark.operators.partitioning import spread as _spread
 
@@ -75,10 +78,21 @@ def _infer_dim(df, vec_col: str) -> int:
     return len(row[0])
 
 
-#: Corpus rows × queries scored per kernel step in :func:`cosine_topk`.
-#: Bounds each float64 work matrix (dot products, cosines, sort keys)
-#: to 4 MB; a chunk keeps at least one corpus row however many queries.
+#: Corpus rows × queries scored per kernel step in :func:`cosine_topk`
+#: and in the exact tier of :func:`knn_classify`.  Bounds each float64
+#: work matrix (dot products, cosines, sort keys) to 4 MB; a step keeps
+#: at least one row of its streaming side however wide the other.
 _KERNEL_CELLS = 1 << 19
+
+#: Query × corpus cells one Python task of :func:`knn_classify`'s exact
+#: tier scores before a second task pays off.  A Python task has a fixed
+#: CPU cost of 0.16-0.2 s on a 4-vCPU x86 host under CPython 3.11
+#: (pyspark's worker setup re-reads the zip directories of its own
+#: archives on every task); the kernel scores, ranks and votes about
+#: 1M cells in that time (0.19 µs a cell at 64 dimensions).  So the
+#: stage runs ceil(n² / CELLS_PER_TASK) tasks, at most
+#: ``defaultParallelism``: one for 500 vectors, four for 2,000.
+CELLS_PER_TASK = 1_000_000
 
 
 #: Above this many query vectors, the broadcast side of the exact scan
@@ -184,17 +198,18 @@ def cosine_topk(
     )
 
 
-def _cosine_kernel(spark, collected, k: int, include_self: bool, ansi: bool):
-    """The ``mapInArrow`` function of :func:`cosine_topk`: the query
-    side (``collected``: query_id, __qv) is prepared here and broadcast
-    once; the returned closure scores (neighbor_id, __cv) batches.
+def _fold_kit():
+    """The numpy code the fold kernels share, as closures: ``prepare``
+    and ``by_length`` group list<double> rows by length, ``cosines``
+    scores two groupings against each other, ``sort_key`` orders the
+    cosines as Spark sorts them, and ``check_zero`` raises where ANSI
+    division would.
 
-    Everything the closure calls is defined in this function so that it
-    ships by value and the workers never import this package.
+    Kernel factories call this on the driver and use the closures in
+    theirs, so everything ships by value and the workers never import
+    this package.
     """
     import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
 
     null_key = np.iinfo(np.int64).min
 
@@ -213,16 +228,17 @@ def _cosine_kernel(spark, collected, k: int, include_self: bool, ansi: bool):
         return ok, offsets[:-1], np.diff(offsets), vals
 
     def by_length(prepared, lo, hi):
-        """Rows ``lo:hi`` that have a fold, grouped by length: (length,
-        row offsets from ``lo``, values as a length × rows matrix)."""
+        """Rows ``lo:hi`` that have a fold, grouped by length: length ->
+        (row offsets from ``lo``, values as a length × rows matrix,
+        norms)."""
         ok, start, length, vals = prepared
         rows = np.nonzero(ok[lo:hi])[0]
         lengths = length[lo:hi][rows]
-        groups = []
+        groups = {}
         for n in np.unique(lengths):
             sel = rows[lengths == n]
-            at = start[lo + sel][None, :] + np.arange(n)[:, None]
-            groups.append((int(n), sel, vals[at]))
+            at = vals[start[lo + sel][None, :] + np.arange(n)[:, None]]
+            groups[int(n)] = (sel, at, fold_norm(at))
         return groups
 
     def fold_dot(at, bt):
@@ -243,36 +259,67 @@ def _cosine_kernel(spark, collected, k: int, include_self: bool, ansi: bool):
                 acc = np.add(acc, np.multiply(a, a))
         return np.sqrt(acc)
 
+    def cosines(a, na, b, nb):
+        """(cosine, null mask, zero-divisor mask) of the ``na`` × ``nb``
+        rows of two :func:`by_length` groupings; pairs without a fold
+        are NULL.  Products commute bit for bit, so either side may be
+        the corpus."""
+        cos = np.full((na, nb), np.nan)
+        null = np.ones((na, nb), dtype=bool)
+        zero = np.zeros((na, nb), dtype=bool)
+        for n, (rows, at, an) in a.items():
+            if n not in b:
+                continue
+            cols, bt, bn = b[n]
+            with np.errstate(all="ignore"):
+                den = np.multiply(an[:, None], bn[None, :])
+                block = np.divide(fold_dot(at, bt), den)
+            if len(rows) == na and len(cols) == nb:
+                cos, null, zero = block, den == 0.0, den == 0.0
+            else:
+                cells = np.ix_(rows, cols)
+                cos[cells], null[cells], zero[cells] = block, den == 0.0, den == 0.0
+        return cos, null, zero
+
+    def sort_key(cos, low):
+        """int64 order of the cosine bits, -0.0 folded into 0.0, one
+        canonical NaN above +inf; ``low`` cells (NULL cosines, excluded
+        pairs) get the lowest key."""
+        canon = np.where(np.isnan(cos), np.nan, cos + 0.0)
+        key = canon.view(np.int64)
+        key = np.where(key < 0, key ^ np.int64(0x7FFFFFFFFFFFFFFF), key)
+        key[low] = null_key
+        return key
+
+    def check_zero(ansi, zero, excluded):
+        """A zero divisor is a NULL cosine, or with ANSI on the error
+        Spark's division raises; excluded pairs are never divided."""
+        if ansi and (zero & ~excluded).any():
+            raise ArithmeticError(
+                "[DIVIDE_BY_ZERO] Division by zero: a cosine scored a "
+                "zero-norm vector (spark.sql.ansi.enabled)"
+            )
+
+    return prepare, by_length, cosines, sort_key, check_zero
+
+
+def _cosine_kernel(spark, collected, k: int, include_self: bool, ansi: bool):
+    """The ``mapInArrow`` function of :func:`cosine_topk`: the query
+    side (``collected``: query_id, __qv) is prepared here and broadcast
+    once; the returned closure scores (neighbor_id, __cv) batches."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    prepare, by_length, cosines, sort_key, check_zero = _fold_kit()
     qids = collected.column("query_id").combine_chunks()
     qvecs = collected.column("__qv").combine_chunks()
     m = len(qids)
-    query_groups = {
-        n: (cols, qt, fold_norm(qt)) for n, cols, qt in by_length(prepare(qvecs), 0, m)
-    }
+    query_groups = by_length(prepare(qvecs), 0, m)
     q_null = qids.is_null().to_numpy(zero_copy_only=False)
     q_code = pc.index_in(qids, value_set=qids).fill_null(-2).to_numpy()
     b_query = spark.sparkContext.broadcast((qids, q_null, q_code, query_groups))
     step = max(1, _KERNEL_CELLS // max(m, 1))
-
-    def chunk_cosines(prepared, lo, hi, groups):
-        """(cosine, null mask, zero-divisor mask) of rows lo:hi × all
-        queries; pairs without a fold are NULL."""
-        cos = np.full((hi - lo, m), np.nan)
-        null = np.ones((hi - lo, m), dtype=bool)
-        zero = np.zeros((hi - lo, m), dtype=bool)
-        for n, rows, ct in by_length(prepared, lo, hi):
-            if n not in groups:
-                continue
-            cols, qt, qn = groups[n]
-            with np.errstate(all="ignore"):
-                den = np.multiply(fold_norm(ct)[:, None], qn[None, :])
-                block = np.divide(fold_dot(ct, qt), den)
-            if len(rows) == hi - lo and len(cols) == m:
-                cos, null, zero = block, den == 0.0, den == 0.0
-            else:
-                at = np.ix_(rows, cols)
-                cos[at], null[at], zero[at] = block, den == 0.0, den == 0.0
-        return cos, null, zero
 
     def kernel(batches):
         if k < 1:
@@ -285,7 +332,8 @@ def _cosine_kernel(spark, collected, k: int, include_self: bool, ansi: bool):
                 c_code = pc.index_in(cids, value_set=qids).fill_null(-1).to_numpy()
             for lo in range(0, batch.num_rows, step):
                 hi = min(lo + step, batch.num_rows)
-                cos, null, zero = chunk_cosines(prepared, lo, hi, groups)
+                rows = hi - lo
+                cos, null, zero = cosines(by_length(prepared, lo, hi), rows, groups, m)
                 if include_self:
                     excluded = np.zeros_like(null)
                 else:
@@ -294,18 +342,8 @@ def _cosine_kernel(spark, collected, k: int, include_self: bool, ansi: bool):
                         | c_null[lo:hi, None]
                         | q_null[None, :]
                     )
-                if ansi and (zero & ~excluded).any():
-                    raise ArithmeticError(
-                        "[DIVIDE_BY_ZERO] Division by zero: cosine_topk "
-                        "scored a zero-norm vector (spark.sql.ansi.enabled)"
-                    )
-                # sort key: int64 order of the cosine bits, -0.0 folded
-                # into 0.0, one canonical NaN above +inf, NULL lowest
-                canon = np.where(np.isnan(cos), np.nan, cos + 0.0)
-                key = canon.view(np.int64)
-                key = np.where(key < 0, key ^ np.int64(0x7FFFFFFFFFFFFFFF), key)
-                key[null | excluded] = null_key
-                rows = hi - lo
+                check_zero(ansi, zero, excluded)
+                key = sort_key(cos, null | excluded)
                 keep = ~excluded
                 if rows > k:
                     kth = np.partition(key, rows - k, axis=0)[rows - k]
@@ -321,6 +359,101 @@ def _cosine_kernel(spark, collected, k: int, include_self: bool, ansi: bool):
                     ],
                     names=["query_id", "neighbor_id", "cosine"],
                 )
+
+    return kernel
+
+
+def _knn_kernel(spark, collected, k: int, tasks: int, ansi: bool, names):
+    """The ``mapInArrow`` function of :func:`knn_classify`'s exact tier.
+
+    ``collected`` (id, vec, label) is the whole corpus.  It is sorted by
+    id here, so neighbor-id order is row order, its labels are coded in
+    ascending order, and all of it is broadcast once.  The returned
+    closure maps slice numbers ``0 .. tasks - 1`` to the (id,
+    predicted_label, votes) rows of that slice of the queries: every
+    query meets every corpus vector inside one task, so its top k and
+    its vote are complete there.  ``names`` names the output columns.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    prepare, by_length, cosines, sort_key, check_zero = _fold_kit()
+    collected = collected.take(pc.sort_indices(collected, [("id", "ascending")]))
+    ids = collected.column("id").combine_chunks()
+    labels = collected.column("label").combine_chunks()
+    values = pc.unique(labels.drop_null())
+    values = values.take(pc.sort_indices(values))
+    code = pc.index_in(labels, value_set=values).fill_null(-1).to_numpy()
+    id_null = ids.is_null().to_numpy(zero_copy_only=False)
+    prepared = prepare(collected.column("vec").combine_chunks())
+    b_corpus = spark.sparkContext.broadcast((ids, id_null, prepared, values, code))
+    n = len(ids)
+    step = max(1, _KERNEL_CELLS // max(n, 1))
+
+    def first_of_runs(*cols):
+        """Where a run of equal tuples starts, in arrays sorted by them."""
+        first = np.ones(len(cols[0]), dtype=bool)
+        for c in cols:
+            first[1:] &= c[1:] == c[:-1]
+        first[1:] = ~first[1:]
+        return first
+
+    def vote(lo, hi, corpus, ids, id_null, prepared, values, code):
+        s = hi - lo
+        cos, null, zero = cosines(by_length(prepared, lo, hi), s, corpus, n)
+        # leave one out: a pair is excluded when its ids are equal (ids
+        # are unique, so that is the query itself) or either is NULL
+        excluded = id_null[lo:hi, None] | id_null[None, :]
+        excluded[np.arange(s), np.arange(lo, hi)] = True
+        check_zero(ansi, zero, excluded)
+        key = sort_key(cos, null | excluded)
+        keep = ~excluded
+        if n > k:
+            kth = np.partition(key, n - k, axis=1)[:, n - k]
+            keep &= key >= kth[:, None]
+        # exact top k: cosine descending, then neighbor id ascending
+        qi, nj = np.nonzero(keep)
+        order = np.lexsort((nj, ~key[qi, nj], qi))
+        qi, nj = qi[order], nj[order]
+        rank = np.arange(len(qi)) - np.searchsorted(qi, qi)
+        lab = code[nj]
+        voted = (rank < k) & (lab >= 0)  # NULL labels cast no vote
+        qi, rank, lab = qi[voted], rank[voted], lab[voted]
+        # votes and best rank per (query, label)
+        order = np.lexsort((rank, lab, qi))
+        qi, rank, lab = qi[order], rank[order], lab[order]
+        starts = np.nonzero(first_of_runs(qi, lab))[0]
+        votes = np.diff(np.append(starts, len(qi)))
+        qi, rank, lab = qi[starts], rank[starts], lab[starts]
+        # winner: votes descending, best rank ascending, label ascending
+        order = np.lexsort((lab, rank, -votes, qi))
+        qi, lab, votes = qi[order], lab[order], votes[order]
+        win = first_of_runs(qi)
+        return pa.RecordBatch.from_arrays(
+            [
+                ids.take(pa.array(lo + qi[win])),
+                values.take(pa.array(lab[win])),
+                pa.array(votes[win], type=pa.int64()),
+            ],
+            names=names,
+        )
+
+    def kernel(batches):
+        if k < 1:
+            return
+        ids, id_null, prepared, values, code = b_corpus.value
+        corpus = by_length(prepared, 0, n)
+        for batch in batches:
+            for part in batch.column(0).to_numpy():
+                start, stop = part * n // tasks, (part + 1) * n // tasks
+                for lo in range(start, stop, step):
+                    out = vote(
+                        lo, min(lo + step, stop), corpus,
+                        ids, id_null, prepared, values, code,
+                    )
+                    if out.num_rows:
+                        yield out
 
     return kernel
 
@@ -940,69 +1073,65 @@ def knn_classify(
     as here, audit the seed labels themselves — a vector whose
     neighbors out-vote its own label is a labeling-error candidate).
 
-    ``method`` picks the neighbor stage: ``"exact"`` (cosine_topk —
-    the brute-force baseline, corpus × corpus through its fold kernel
-    with per-chunk top-k pruning, legal while the corpus broadcasts;
-    its bounded collect of the query side refuses a corpus beyond
-    MAX_BROADCAST_QUERIES, and ``num_vectors`` — the corpus size, when
-    known — refuses before any job runs) or ``"lsh"``
-    (lsh_bucketed_topk — the 100 TB path:
-    bucketed candidates, one shuffle, no all-pairs stage;
-    ``method_kwargs`` pass through: planes, multiprobe_bits, dim).
-    Everything after the neighbor stage is identical.
+    Deterministic output: (id, predicted_label, votes).  Neighbors rank
+    by cosine descending, then neighbor id ascending, with
+    :func:`cosine_topk`'s semantics (NULL cosines last; a pair with a
+    NULL id is never scored).  Unlabeled (NULL-label) neighbors cast no
+    vote, so a query whose k neighbors are all unlabeled is absent.
+    The winner has the most votes, then the best (lowest) neighbor
+    rank among the tied labels, then the lowest label — all
+    SQL-expressible, so the exact tier carries a full DuckDB value
+    oracle.
 
-    Deterministic output: (id, predicted_label, votes) with ties broken
-    by best (lowest) neighbor rank within the tied labels, then by
-    label value — both SQL-expressible, so the exact tier carries a
-    full DuckDB value oracle.
+    ``method`` picks the tier:
 
-    Plan shape: neighbor top-k (its own contract) → join neighbor ids
-    against the narrow (id, label) projection (AQE picks broadcast
-    while labels are small) → count votes per (query, label) → one
-    WindowGroupLimit-prunable row_number to keep each query's winning
-    label.  Only the exact tier collects (its query side, which is the
-    corpus); the vote table is at most corpus × k rows and aggregates
-    map-side first.
+    * ``"exact"`` — the brute-force baseline, legal while the corpus
+      broadcasts.  One job collects (id, vector, label) — at most
+      ``MAX_BROADCAST_QUERIES + 1`` rows, refusing past the bound;
+      ``num_vectors``, the corpus size when known, refuses before any
+      job — and the ids must be unique (duplicates raise after that
+      collect, before the result runs anything).  The result is one
+      ``mapInArrow`` stage over the broadcast corpus, driven by
+      ``spark.range``: each of its ceil(n² / ``CELLS_PER_TASK``) tasks
+      (at most ``defaultParallelism``) scores a slice of the queries
+      against every vector in :func:`_fold_kit`'s fold — cosines
+      bit-identical to :func:`cosine_topk` — ranks them exactly and
+      votes.  No shuffle, window, join or second corpus scan.
+    * ``"lsh"`` — :func:`lsh_bucketed_topk`, the 100 TB path:
+      bucketed candidates, one shuffle, no all-pairs stage;
+      ``method_kwargs`` pass through (planes, multiprobe_bits, dim).
+      Its neighbors arrive through that shuffle, so the vote is SQL:
+      join neighbor ids against the narrow (id, label) projection,
+      count votes per (query, label), keep each query's winner with a
+      WindowGroupLimit-prunable row_number.
     """
-    queries = corpus.select(F.col(id_col).alias("query_id"), F.col(vec_col))
     if method == "exact":
-        # the query set IS the corpus here, so pass its size as the
-        # broadcast-guard hint: leave-one-out over a corpus beyond
-        # MAX_BROADCAST_QUERIES must refuse the flat tier (use lsh)
-        topk = cosine_topk(
-            corpus,
-            queries,
-            k=k,
-            id_col=id_col,
-            vec_col=vec_col,
-            include_self=False,
-            num_queries=num_vectors,
-            **method_kwargs,
-        )
-    elif method == "lsh":
-        if num_vectors is not None:
-            # the lsh tier never broadcasts the query set, so there is
-            # nothing for the hint to guard — a caller passing it here
-            # almost certainly believes a guard is active that isn't
-            raise ValueError(
-                "num_vectors is the flat-tier broadcast-guard hint; "
-                "method='lsh' is bucketed and does not broadcast — "
-                "drop the argument"
+        if method_kwargs:
+            raise TypeError(
+                "knn_classify(method='exact') takes no method arguments, "
+                f"got {sorted(method_kwargs)}"
             )
-        topk = lsh_bucketed_topk(
-            corpus,
-            queries,
-            k=k,
-            id_col=id_col,
-            vec_col=vec_col,
-            **method_kwargs,
-        )
-    else:
+        return _knn_exact(corpus, k, id_col, vec_col, label_col, num_vectors)
+    if method != "lsh":
         raise ValueError(f"method must be 'exact' or 'lsh', got {method!r}")
-    # unlabeled (NULL-label) neighbors cast no vote — they would
-    # otherwise form their own NULL "label" group and could win the
-    # majority; a query whose k neighbors are ALL unlabeled is absent
-    # from the output (nothing to vote with)
+    if num_vectors is not None:
+        # the lsh tier never broadcasts the corpus, so there is nothing
+        # for the hint to guard — a caller passing it here almost
+        # certainly believes a guard is active that isn't
+        raise ValueError(
+            "num_vectors is the flat-tier broadcast-guard hint; "
+            "method='lsh' is bucketed and does not broadcast — "
+            "drop the argument"
+        )
+    queries = corpus.select(F.col(id_col).alias("query_id"), F.col(vec_col))
+    topk = lsh_bucketed_topk(
+        corpus,
+        queries,
+        k=k,
+        id_col=id_col,
+        vec_col=vec_col,
+        **method_kwargs,
+    )
     labels = corpus.filter(F.col(label_col).isNotNull()).select(
         F.col(id_col).alias("neighbor_id"), F.col(label_col).alias("__nl")
     )
@@ -1026,6 +1155,58 @@ def knn_classify(
             "votes",
         )
     )
+
+
+def _knn_exact(
+    corpus: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    label_col: str,
+    num_vectors: int | None,
+) -> DataFrame:
+    """:func:`knn_classify`'s exact tier: the bounded collect, then the
+    :func:`_knn_kernel` stage over ``spark.range`` slices."""
+    import pyarrow.compute as pc
+
+    def too_many(what):
+        return ValueError(
+            f"knn_classify(method='exact') collects and broadcasts the "
+            f"corpus; {what} MAX_BROADCAST_QUERIES={MAX_BROADCAST_QUERIES}. "
+            "Use method='lsh' for large corpora."
+        )
+
+    if num_vectors is not None and num_vectors > MAX_BROADCAST_QUERIES:
+        raise too_many(f"{num_vectors} vectors exceeds")
+    rows = corpus.select(
+        F.col(id_col).alias("id"),
+        _to_double(F.col(vec_col)).alias("vec"),
+        F.col(label_col).alias("label"),
+    )
+    collected = rows.limit(MAX_BROADCAST_QUERIES + 1).toArrow()
+    n = collected.num_rows
+    if n > MAX_BROADCAST_QUERIES:
+        raise too_many("more vectors arrived than")
+    ids = collected.column("id")
+    if pc.count_distinct(ids).as_py() != n - ids.null_count:
+        raise ValueError(
+            f"knn_classify(method='exact') needs unique ids: {id_col!r} "
+            "has duplicates (deduplicate the corpus first)"
+        )
+    spark = corpus.sparkSession
+    ansi = spark.conf.get("spark.sql.ansi.enabled").lower() == "true"
+    tasks = min(
+        max(1, -(-n * n // CELLS_PER_TASK)), spark.sparkContext.defaultParallelism
+    )
+    schema = StructType(
+        [
+            StructField(id_col, rows.schema["id"].dataType),
+            StructField("predicted_label", rows.schema["label"].dataType),
+            StructField("votes", LongType(), nullable=False),
+        ]
+    )
+    kernel = _knn_kernel(spark, collected, k, tasks, ansi, schema.names)
+    return spark.range(tasks, numPartitions=tasks).mapInArrow(kernel, schema)
 
 
 def cluster_assign(

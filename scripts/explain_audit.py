@@ -265,11 +265,13 @@ AUDITED = {
         "event_type aggregate, with map-side partials"
     ),
     "embed_knn_classify": (
-        "exact kNN tier: corpus x broadcast-query flat scan in one "
-        "MapInArrow fold kernel (query collect bounded by "
-        "MAX_BROADCAST_QUERIES; the lsh method is the bucketed scale "
-        "path), vote counts aggregate map-side, winner pick is a "
-        "WindowGroupLimit-prunable rank-1 filter"
+        "exact kNN tier: the corpus is read once, by a construct-time "
+        "collect bounded by MAX_BROADCAST_QUERIES, and broadcast; the "
+        "plan is Range -> ONE MapInArrow stage whose work-sized task "
+        "count (ceil(n^2 / CELLS_PER_TASK), one at this scale) each "
+        "rank a slice of queries against every vector and vote in the "
+        "fold kernel — no Exchange, Window or join, no second scan "
+        "(the lsh method is the bucketed scale path)"
     ),
     "events_mad_outliers": (
         "median and MAD each one partial+final percentile agg on the "
@@ -432,7 +434,9 @@ AUDITED = {
         "bucket models -> ONE doc-grain hash aggregate with map-side "
         "partials -> id join-back; zero Python, never a per-feature "
         "shuffle (the fit side is one bucket-grain agg, zero joins); "
-        "one lazy plan whose only cache is the pre-shuffle feature table"
+        "one lazy plan that caches nothing, whose target and raw model "
+        "slices plan the same aggregate, so AQE computes one bucket "
+        "shuffle and reuses it (asserted in tests/test_plans.py)"
     ),
     "pipeline_dsir_select": (
         "rank-based top-25% selection: the approxQuantile coarse "

@@ -1002,6 +1002,103 @@ def test_knn_classify_exact_tier_bounds_its_query_collect(spark, monkeypatch):
     assert similarity.knn_classify(df.filter("vec_id < 5"), k=2).count() == 5
 
 
+def _topk_sql_vote(corpus, k):
+    """The exact kNN tier as it was composed: :func:`cosine_topk`
+    leave-one-out neighbors, then the label join, vote aggregate and
+    winner window in SQL.  Kept here only as the reference the fused
+    kernel must match."""
+    from pyspark.sql import Window
+
+    queries = corpus.select(F.col("vec_id").alias("query_id"), "embedding")
+    topk = similarity.cosine_topk(corpus, queries, k=k, include_self=False)
+    labels = corpus.filter(F.col("label").isNotNull()).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("label").alias("__nl")
+    )
+    votes = (
+        topk.join(labels, on="neighbor_id")
+        .groupBy("query_id", "__nl")
+        .agg(F.count(F.lit(1)).alias("votes"), F.min("rank").alias("__best"))
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("votes"), F.asc("__best"), F.asc("__nl")
+    )
+    return (
+        votes.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .select(
+            F.col("query_id").alias("vec_id"),
+            F.col("__nl").alias("predicted_label"),
+            "votes",
+        )
+    )
+
+
+def _assert_knn_matches_reference(corpus, k):
+    got = similarity.knn_classify(corpus, k=k)
+    want = _topk_sql_vote(corpus, k)
+    assert got.schema == want.schema
+    got, want = got.collect(), want.collect()
+    assert sorted(got) == sorted(want), k
+    return want
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_knn_classify_exact_kernel_equals_topk_sql_vote(spark, sf):
+    emb = spark.read.parquet(f"/root/testdata/{sf}/embeddings.parquet")
+    for k in (10, 3):
+        assert len(_assert_knn_matches_reference(emb, k)) == emb.count()
+
+
+def _edge_knn(spark, rows, id_type="long", label_type="int"):
+    # labels cycle through three values; every fourth row is unlabeled
+    values = ("a", "b", "c") if label_type == "string" else (0, 1, 2)
+    labeled = [
+        (i, v, None if n % 4 == 3 else values[n % 3])
+        for n, (i, v) in enumerate(rows)
+    ]
+    return spark.createDataFrame(
+        labeled, f"vec_id {id_type}, embedding array<double>, label {label_type}"
+    )
+
+
+def test_knn_classify_exact_kernel_equals_topk_sql_vote_on_edge_vectors(spark):
+    """EDGE_CORPUS (NULL vector and element, wrong length, NULL id,
+    duplicate vectors, -0.0 and NaN cosines) with NULL labels, for k
+    below and above the corpus size; string ids and labels; a zero
+    vector under ANSI off (NULL cosine) and on (DIVIDE_BY_ZERO on both
+    paths)."""
+    corpus = _edge_knn(spark, EDGE_CORPUS)
+    for k in (1, 2, 4, 50):
+        _assert_knn_matches_reference(corpus, k)
+    s_rows = [(None if i is None else f"v{i:02d}", v) for i, v in EDGE_CORPUS]
+    _assert_knn_matches_reference(_edge_knn(spark, s_rows, "string", "string"), 3)
+    assert _assert_knn_matches_reference(corpus.filter(F.lit(False)), 3) == []
+    with_zero = _edge_knn(spark, EDGE_CORPUS + [(15, [0.0, 0.0, 0.0])])
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        for k in (2, 50):
+            _assert_knn_matches_reference(with_zero, k)
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        for fn in (_topk_sql_vote, similarity.knn_classify):
+            with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+                fn(with_zero, k=2).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
+def test_knn_classify_exact_tier_refuses_duplicate_ids(spark):
+    """A duplicated id would be both a query and another query's self
+    pair; the exact tier raises once its collect has seen the ids, and
+    the result never runs.  Duplicated NULL ids are never scored, so
+    they pass."""
+    dup = _edge_knn(spark, EDGE_CORPUS + [(1, [0.0, 1.0, 1.0])])
+    with pytest.raises(ValueError, match="unique ids"):
+        similarity.knn_classify(dup, k=2)
+    nulls = _edge_knn(spark, EDGE_CORPUS + [(None, [0.0, 1.0, 1.0])])
+    _assert_knn_matches_reference(nulls, 2)
+
+
 def test_lsh_topk_wrong_dim_fails_fast(spark):
     # zip_with would NULL-pad on a wrong dim, silently collapsing every
     # signature to bucket 0 — the plan-side guard must raise instead

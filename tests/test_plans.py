@@ -819,20 +819,37 @@ def test_props_extract_stays_jvm_side_single_agg_exchange(spark):
 
 
 def test_knn_classify_exact_tier_is_a_fold_kernel_not_a_pair_join(spark):
-    """The exact kNN tier scores the corpus in cosine_topk's mapInArrow
-    fold kernel against a broadcast variable: no per-pair
-    zip_with/aggregate expression and no cartesian or nested-loop join
-    producing the pairs."""
+    """The exact kNN tier reads the corpus once, in its construct-time
+    collect, and its result is one mapInArrow stage over spark.range
+    slices of the broadcast: no Exchange, Window or join, no second scan
+    of the corpus, and no per-pair zip_with/aggregate expression.  On
+    the 500-vector table under local[4] the stage is one Python task
+    (250k cells, under CELLS_PER_TASK), not defaultParallelism."""
     from python_dtl_spark.operators import similarity
 
+    sc = spark.sparkContext
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    df = similarity.knn_classify(emb, k=5)
+    assert emb.count() == 500 and sc.defaultParallelism == 4
+    sc.setJobGroup("knn-exact-construct", "the corpus collect")
+    try:
+        df = similarity.knn_classify(emb, k=5)
+        construct = sc.statusTracker().getJobIdsForGroup("knn-exact-construct")
+        sc.setJobGroup("knn-exact-action", "the kernel stage")
+        assert df.count() == 500
+        action = sc.statusTracker().getJobIdsForGroup("knn-exact-action")
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(construct) == 1
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
     assert "MapInArrow" in optimized, optimized
     assert "zip_with(" not in optimized and "aggregate(" not in optimized
     plan = _exec_plan(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    for node in ("Exchange", "Window", "Join", "Scan parquet", "FileScan"):
+        assert node not in plan, plan
+    assert "Range" in plan, plan
+    tracker = sc.statusTracker()
+    stages = [s for j in action for s in tracker.getJobInfo(j).stageIds]
+    assert [tracker.getStageInfo(s).numTasks for s in stages] == [1]
 
 
 def test_knn_classify_lsh_tier_no_all_pairs_stage(spark):
@@ -1292,8 +1309,10 @@ def test_dsir_weights_caches_nothing_past_a_shuffle(spark):
     fit, scoring) caches no plan that holds an Exchange.  A cached
     plan keeps its output partitioning, so a cache above a shuffle
     would pin spark.sql.shuffle.partitions tasks on every read of a
-    <=10k-row model; the only cache left is the pre-shuffle feature
-    table."""
+    <=10k-row model.  The pre-shuffle feature table is not cached
+    either (a cache would stop AQE reusing the fit's bucket shuffle,
+    see test_dsir_fit_split_slices_compute_one_bucket_shuffle), so the
+    plan reads no cache at all."""
     from pyspark.sql import functions as F
 
     from python_dtl_spark.operators import classify
@@ -1314,12 +1333,31 @@ def test_dsir_weights_caches_nothing_past_a_shuffle(spark):
                 if node.nodeName() == "InMemoryTableScan":
                     cached.append(node.relation().cachedPlan())
             pending += subqueries
-        assert cached
-        for plan in cached:
-            names = [n.nodeName() for n in _plan_nodes(plan, [])]
-            assert not any("Exchange" in n for n in names), names
+        assert cached == []
     finally:
         release_all_cached(spark)
+
+
+def test_dsir_fit_split_slices_compute_one_bucket_shuffle(spark):
+    """doc_dsir_weights joins both slices of dsir_fit_split's one
+    bucket aggregate.  Their subtrees must be identical, so that AQE
+    computes one hashpartitioning(bucket) exchange and reuses it for
+    the other slice: column pruning must not leave a different partial
+    aggregate on each side."""
+    from python_dtl_spark.catalog import QUERIES
+
+    df = QUERIES["doc_dsir_weights"].fn(spark, SF)
+    df.collect()
+    subqueries: list = []
+    nodes = _plan_nodes(df._jdf.queryExecution().executedPlan(), subqueries)
+    assert subqueries == []  # the totals are pruned: no weight emitted
+    heads = [n.toString().split("\n")[0] for n in nodes]
+    computed = [h for h in heads if h.startswith("Exchange hashpartitioning(bucket")]
+    reused = [
+        h for h in heads
+        if h.startswith("ReusedExchange") and "hashpartitioning(bucket" in h
+    ]
+    assert len(computed) == 1 and len(reused) == 1, heads
 
 
 def test_ppl_delta_select_plan_shape(spark):
